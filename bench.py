@@ -41,6 +41,12 @@ import re
 import sys
 import time
 
+# Each suite pass starts cold: this empties the shared-frame registry,
+# load_table's relations included, so no entry inherits a frame an
+# earlier caller built and the shared_cost_groups attribution holds.
+from dataingestiontohana_spark.catalog import (
+    clear_shared_frames as clear_shared_caches,
+)
 from dataingestiontohana_spark.plans.bundles import build_registry
 from dataingestiontohana_spark.session import get_spark
 
@@ -53,47 +59,6 @@ QUERIES, _ = build_registry()
 
 def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
-
-
-def shared_caches() -> dict[str, dict]:
-    """Every process-level shared-frame cache in the package,
-    discovered by IMPORT SCAN (r8 verdict item 9): any module-level
-    dict global named ``_*_CACHE`` (or the broadcast registry
-    ``_PROBE_BC``) in any ``dataingestiontohana_spark`` module. A new
-    cache is picked up automatically — it cannot be added without
-    also being cleared between bench passes, which would otherwise
-    silently warm a shared_cost_groups entry. Keys are
-    ``module.GLOBAL`` for reporting."""
-    import importlib
-    import pkgutil
-
-    import dataingestiontohana_spark as pkg
-
-    found: dict[str, dict] = {}
-    for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
-        mod = importlib.import_module(info.name)
-        for gname, val in vars(mod).items():
-            if not isinstance(val, dict):
-                continue
-            if (gname.startswith("_") and gname.endswith("_CACHE")) or (
-                gname == "_PROBE_BC"
-            ):
-                # id-dedup: re-exports alias the same dict object
-                if not any(v is val for v in found.values()):
-                    found[f"{info.name}.{gname}"] = val
-    return found
-
-
-def clear_shared_caches() -> None:
-    """Drop every process-level shared frame so the suite starts from
-    a defined cold state. `run_suite` calls this up front — a caller
-    that already touched shared frames (an embedding harness, a
-    repeated in-process probe) would otherwise hand some entries a
-    warm cache and skew the shared_cost_groups attribution. (Median
-    sampling itself runs fresh subprocesses — see the --runs note —
-    so this is a starting-state guarantee, not the i.i.d. mechanism.)"""
-    for cache in shared_caches().values():
-        cache.clear()
 
 
 def run_suite(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, str]]:

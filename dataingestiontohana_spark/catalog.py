@@ -8,33 +8,13 @@ gets column pruning + predicate pushdown into the scan for free.
 
 from __future__ import annotations
 
-import functools
 import os
 import threading
 
+from py4j.protocol import Py4JError
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-def locked_frame_builder(fn):
-    """Decorator: serialize a shared-frame cache getter on its own
-    re-entrant lock. Bundle parts build on a driver thread pool
-    (plans/bundles.py::_bundle_fn), and an unguarded get-or-build
-    getter racing on a cold cache would construct — and at action time
-    MATERIALIZE — the same checkpointed frame once per thread. The
-    lock is PER GETTER (not global): different caches' builds — each
-    a lazy localCheckpoint whose physical planning costs real JVM
-    time — may overlap across threads; only same-cache callers
-    serialize. Re-entrant because getters nest one-directionally
-    (e.g. _dhash_frame -> _synthetic_media): nested acquisition of a
-    DIFFERENT getter's lock cannot cycle."""
-    lock = threading.RLock()
-
-    @functools.wraps(fn)
-    def wrapped(*args, **kwargs):
-        with lock:
-            return fn(*args, **kwargs)
-
-    return wrapped
 
 TABLES = (
     "region",
@@ -79,21 +59,73 @@ def local_rows(
     )
 
 
-# Plan-object cache for load_table: (applicationId, sf_dir, name) ->
-# the lazily-planned DataFrame. Opening a parquet relation costs
-# ~110 ms of driver work (file listing + footer schema + relation
-# construction) per call, and the declared surface opens the same ten
-# tables ~350 times per bench pass — tens of seconds of pure plan
-# re-construction (guide §5: the driver should do almost no data
-# work). Reusing the IMMUTABLE DataFrame object repeats none of that
-# and changes nothing downstream: the plan is lazy, every action
-# still scans the parquet, no rows are ever materialized here. The
-# ``_CACHE`` naming keeps it inside bench.py's shared-cache registry,
-# so every bench pass still starts from a defined cold state.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# Shared frames: (applicationId, name, *key) -> whatever the build
+# returned (a lazy DataFrame, a tuple of them, a broadcast). Builds run
+# once per key per application; see shared_frame.
+_FRAMES: dict[tuple, object] = {}
+_LOCKS: dict[tuple, threading.RLock] = {}
+_GUARD = threading.Lock()  # held for dict access only, never for a build
 
 
-@locked_frame_builder
+def shared_frame(spark: SparkSession, name: str, key: tuple, build):
+    """Return the value ``build()`` made for ``(name, key)`` in this
+    Spark application, calling ``build`` on the first request only.
+
+    Every frame that several queries share (a lazily
+    localCheckpointed edge set, a synthetic media corpus, a parquet
+    relation) goes through here, so there is one get-or-build rule,
+    one lock rule and one eviction rule:
+
+    - Each ``(application, name, key)`` has its own re-entrant lock,
+      held while building. Bundle parts run on a driver thread pool
+      (plans/bundles.py::_bundle_fn); callers racing on a cold key
+      wait for the one build instead of planning — and at action time
+      materializing — their own copy. Independent keys never share a
+      lock, so their builds overlap, and a build may request other
+      shared frames (``_dhash_frame -> _synthetic_media``): nesting
+      runs one way, so it cannot cycle.
+    - Keys carry the applicationId. A process has at most one live
+      SparkContext, so on any miss every entry of another application
+      belongs to a stopped session and is dropped: its frames are
+      unusable.
+    - ``clear_shared_frames`` empties the registry."""
+    app = spark.sparkContext.applicationId
+    full = (app, name, *key)
+    with _GUARD:
+        value = _FRAMES.get(full)
+        if value is not None:
+            return value
+        for stale in [k for k in _FRAMES if k[0] != app]:
+            del _FRAMES[stale]
+        for stale in [k for k in _LOCKS if k[0] != app]:
+            del _LOCKS[stale]
+        lock = _LOCKS.setdefault(full, threading.RLock())
+    with lock:
+        value = _FRAMES.get(full)
+        if value is None:
+            value = build()
+            with _GUARD:
+                _FRAMES[full] = value
+        return value
+
+
+def clear_shared_frames(name: str | None = None) -> None:
+    """Drop every shared frame (or only those registered under
+    ``name``), so the next request builds afresh. A dropped broadcast
+    is unpersisted: its executor copies go, while lazy frames that
+    still reference it re-fetch the value from the driver."""
+    with _GUARD:
+        dropped = [
+            _FRAMES.pop(k) for k in list(_FRAMES) if name in (None, k[1])
+        ]
+    for value in dropped:
+        if isinstance(value, Broadcast):
+            try:
+                value.unpersist(blocking=False)
+            except Py4JError:  # its application is already stopped
+                pass
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one parquet table, normalizing nanosecond timestamps.
 
@@ -102,24 +134,29 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     microsecond TimestampType column (integer `div`, not float division
     — ns epoch values exceed 2^53). Sub-microsecond precision is
     dropped, which is below the granularity any declared query observes.
+
+    The lazily-planned DataFrame is a shared frame per (sf_dir, name).
+    Opening a parquet relation costs ~110 ms of driver work (file
+    listing + footer schema + relation construction) per call, and the
+    declared surface opens the same ten tables ~350 times per bench
+    pass. Reusing the IMMUTABLE DataFrame object repeats none of that
+    and changes nothing downstream: the plan is lazy and every action
+    still scans the parquet.
     """
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
-    df = _TABLE_CACHE.get(key)
-    if df is not None:
+
+    def build() -> DataFrame:
+        try:
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        except Exception:  # pragma: no cover — conf absent on future Spark
+            pass
+        df = spark.read.parquet(table_path(sf_dir, name))
+        if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
-    # drop entries of stopped sessions (pytest/bench restart Spark in
-    # one process; frames of a dead session are unusable)
-    for k in [k for k in _TABLE_CACHE if k[0] != key[0]]:
-        _TABLE_CACHE.pop(k, None)
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:  # pragma: no cover — conf absent on future Spark
-        pass
-    df = spark.read.parquet(table_path(sf_dir, name))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    _TABLE_CACHE[key] = df
-    return df
+
+    return shared_frame(
+        spark, "table", (os.path.abspath(sf_dir), name), build
+    )
 
 
 def load_tables(

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dataingestiontohana_spark.catalog import load_table, locked_frame_builder
+from dataingestiontohana_spark.catalog import load_table, shared_frame
 
 # suppliers co-appearing in fewer orders than this are not connected:
 # the weight threshold keeps the graph sparse as the corpus grows
@@ -51,11 +51,6 @@ MIN_COOCCUR = 5
 # (degree, node). Safe while degree < 2^31 and node < 2^32; a corpus
 # with a single node of degree >= 2^31 needs the DECIMAL(38,0) form.
 _RANK_BASE = 1 << 32
-
-# q141 and q148 share the edge build + orientation (the expensive
-# stages); one lazily-localCheckpointed pair per (application, sf_dir)
-# — same contract as plans/llm_dedup._EDGE_CACHE.
-_GRAPH_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame, DataFrame]] = {}
 
 
 def _supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -92,12 +87,12 @@ def _supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@locked_frame_builder
 def _graph_frames(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(edges, degrees, oriented) for the supplier co-occurrence
-    graph, built once per session+sf_dir.
+    graph: q141 and q148 share the edge build + orientation (the
+    expensive stages) as one shared frame per sf_dir.
 
     ``edges``:    (s1, s2, cnt) — undirected weighted edge list.
     ``degrees``:  (node, deg) — undirected degree.
@@ -106,10 +101,14 @@ def _graph_frames(
     of the head, kept so wedge pairs can order by rank without
     re-joining degrees.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _GRAPH_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return shared_frame(
+        spark, "graph_frames", (sf_dir,), lambda: _build_graph(spark, sf_dir)
+    )
+
+
+def _build_graph(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     e = _supplier_edges(spark, sf_dir).localCheckpoint(eager=False)
     deg = (
         e.select(F.col("s1").alias("node"))
@@ -136,7 +135,6 @@ def _graph_frames(
         )
         .localCheckpoint(eager=False)
     )
-    _GRAPH_CACHE[key] = (e, deg, oriented)
     return e, deg, oriented
 
 

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dataingestiontohana_spark.catalog import local_rows, locked_frame_builder
+from dataingestiontohana_spark.catalog import local_rows, shared_frame
 
 from dataingestiontohana_spark.sources.csv_envelope import parse_sensor_csv
 from dataingestiontohana_spark.sources.generator import (
@@ -56,7 +56,6 @@ def q40_sensor_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- WARC crawl-archive ingestion (round 9) ---------------------------
 
-_WARC_CACHE: dict[str, DataFrame] = {}
 _WARC_FILES, _WARC_DOCS = 6, (2, 3)  # response records with content
 
 # r11: planted NON-UTF-8 records (several percent of a real crawl is
@@ -147,8 +146,11 @@ def _warc_html(i: int, j: int) -> str:
     )
 
 
-@locked_frame_builder
 def _warc_corpus(spark: SparkSession) -> DataFrame:
+    return shared_frame(spark, "warc_corpus", (), lambda: _build_warc(spark))
+
+
+def _build_warc(spark: SparkSession) -> DataFrame:
     """Six synthetic crawl files, five records each: warcinfo, a
     request, two content responses (md5-derived words, so DuckDB
     replays the extracted text verbatim), and a 404. Files 0-2 are
@@ -157,11 +159,6 @@ def _warc_corpus(spark: SparkSession) -> DataFrame:
     a gzip.decompress-based reader silently truncates to one record."""
     import gzip as _gz
 
-    key = spark.sparkContext.applicationId
-    df = _WARC_CACHE.get(key)
-    if df is not None:
-        return df
-    _WARC_CACHE.clear()
     rows = []
     for i in range(_WARC_FILES):
         recs = [
@@ -221,12 +218,10 @@ def _warc_corpus(spark: SparkSession) -> DataFrame:
     # partitions and each coalesced task then pays one Python-runner
     # round trip PER PARENT PARTITION serially (~0.23 s each at
     # local[32] — measured 3.7 s to materialize this 9-row corpus)
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 2),
         "file_id long, content binary",
     ).localCheckpoint(eager=False)
-    _WARC_CACHE[key] = df
-    return df
 
 
 def q216_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:

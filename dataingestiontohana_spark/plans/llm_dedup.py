@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dataingestiontohana_spark.catalog import load_table, locked_frame_builder
+from dataingestiontohana_spark.catalog import load_table, shared_frame
 from dataingestiontohana_spark.functions.text import normalize_text
 from dataingestiontohana_spark.operators.connected_components import (
     connected_components,
@@ -32,50 +32,30 @@ from dataingestiontohana_spark.operators.dedup import (
 
 # q32 and q66 both consume the exact Jaccard >= 0.5 edge set; building
 # it twice doubles the most expensive dedup stage (~10 s combined cold
-# at sf0.1). One lazily-localCheckpointed DataFrame per
-# (application, sf_dir, threshold) is shared instead: the first action
-# (whichever of q32/q66 runs first) materializes the edges on the
-# executors, the second reuses the checkpointed RDD. Keyed on
-# applicationId so a restarted session never sees another context's
-# stale RDD.
-_EDGE_CACHE: dict[tuple[str, str, float], DataFrame] = {}
-
-
-@locked_frame_builder
+# at sf0.1). One lazily-localCheckpointed shared frame per
+# (sf_dir, threshold) instead: the first action (whichever of q32/q66
+# runs first) materializes the edges on the executors, the second
+# reuses the checkpointed RDD.
 def _exact_pairs_cached(
     spark: SparkSession, sf_dir: str, threshold: float = 0.5
 ) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, threshold)
-    df = _EDGE_CACHE.get(key)
-    if df is None:
-        d = load_table(spark, sf_dir, "documents")
-        df = exact_jaccard_pairs(d, threshold).localCheckpoint(eager=False)
-        _EDGE_CACHE[key] = df
-    return df
+    return shared_frame(spark, "exact_pairs", (sf_dir, threshold), lambda: (
+        exact_jaccard_pairs(load_table(spark, sf_dir, "documents"), threshold)
+        .localCheckpoint(eager=False)
+    ))
 
 
 # q30 (the near-dup pairs themselves) and q191 (the LSH-vs-truth
 # quality audit) both consume the banded-MinHash candidate frame —
-# the expensive shingle->signature->band->bucket-join stage. Same
-# sharing discipline as the exact-pair edges above: one lazily
-# localCheckpointed frame per (application, sf_dir), materialized by
-# whichever query acts first, reused by the other.
-_LSH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-@locked_frame_builder
+# the expensive shingle->signature->band->bucket-join stage. Shared
+# like the exact-pair edges above, materialized by whichever query
+# acts first, reused by the other.
 def _lsh_candidates_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _LSH_CACHE.get(key)
-    if df is None:
-        d = load_table(spark, sf_dir, "documents")
-        df = (
-            minhash_candidates(d)
-            .where(F.col("jaccard_sig") >= 0.5)
-            .localCheckpoint(eager=False)
-        )
-        _LSH_CACHE[key] = df
-    return df
+    return shared_frame(spark, "lsh_candidates", (sf_dir,), lambda: (
+        minhash_candidates(load_table(spark, sf_dir, "documents"))
+        .where(F.col("jaccard_sig") >= 0.5)
+        .localCheckpoint(eager=False)
+    ))
 
 
 def q29_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1109,13 +1089,16 @@ WINNOW_HOT_DOC_CAP = 50
 
 
 # q211 (per-doc summary) and q212 (overlap pairs) both consume the
-# selected-fingerprint frame; one lazily-localCheckpointed frame per
-# (application, sf_dir) — the _exact_pairs_cached sharing discipline.
-_WINNOW_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-@locked_frame_builder
+# selected-fingerprint frame; one lazily-localCheckpointed shared frame
+# per sf_dir, like _exact_pairs_cached.
 def _winnow_selected(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return shared_frame(
+        spark, "winnow_selected", (sf_dir,),
+        lambda: _build_winnow(spark, sf_dir),
+    )
+
+
+def _build_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_shingles, c) — the winnowing fingerprint selection
     (Schleimer, Wilkerson & Aiken, SIGMOD 2003; the MOSS algorithm):
     hash every 3-gram word shingle, slide a width-W window over the
@@ -1132,13 +1115,7 @@ def _winnow_selected(spark: SparkSession, sf_dir: str) -> DataFrame:
     PARTITIONED by doc_id — never a global sort; dedup of selected
     fingerprints is a distinct on (doc_id, composite). Docs with fewer
     than W shingles emit nothing (no full window — the paper's
-    guarantee threshold). Cached per (application, sf_dir) like the
-    exact-pair edges; plan construction happens only on a miss."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _WINNOW_CACHE.get(key)
-    if df is not None:
-        return df
-
+    guarantee threshold)."""
     from pyspark.sql import Window
 
     from dataingestiontohana_spark.operators.sketches import _md5_int
@@ -1158,15 +1135,13 @@ def _winnow_selected(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("pos")
         .rowsBetween(0, _WINNOW_W - 1)
     )
-    df = (
+    return (
         rows.withColumn("wmin", F.min("c").over(win))
         .where(F.col("pos") <= F.col("n_shingles") - _WINNOW_W)
         .select("doc_id", "n_shingles", F.col("wmin").alias("c"))
         .distinct()
         .localCheckpoint(eager=False)
     )
-    _WINNOW_CACHE[key] = df
-    return df
 
 
 def q211_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:

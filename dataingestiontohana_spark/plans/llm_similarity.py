@@ -20,7 +20,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dataingestiontohana_spark.catalog import load_table, local_rows
+from dataingestiontohana_spark.catalog import (
+    clear_shared_frames,
+    load_table,
+    local_rows,
+    shared_frame,
+)
 from dataingestiontohana_spark.functions.vector import cosine_similarity
 
 DIM = 64
@@ -208,10 +213,6 @@ def q35_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # embed_neardup_cogrouped (no driver materialization at any size).
 _PROBE_BROADCAST_BYTES = 512 << 20
 
-# last probe broadcast per application — replaced (and unpersisted) on
-# the next call so long-lived sessions don't accumulate probe matrices
-_PROBE_BC: dict[str, object] = {}
-
 
 def embed_neardup_broadcast(
     corpus: DataFrame, probes: DataFrame, tau: float
@@ -248,19 +249,16 @@ def embed_neardup_broadcast(
         return spark.createDataFrame([], out_schema)
     pids = pdf["vec_id"].to_numpy(dtype=np.int64)
     pmat = np.stack(pdf["embedding"].apply(np.asarray, dtype=np.float64).values)
-    # retire the previous call's broadcast (non-blocking) so repeated
-    # invocations in one long-lived session hold at most ONE probe
-    # matrix per executor instead of accumulating them for the
-    # application lifetime. The newest broadcast stays alive because
-    # the returned DataFrame is lazy — consumers may run it later.
-    prev = _PROBE_BC.pop(spark.sparkContext.applicationId, None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:  # already destroyed / context gone
-            pass
+    # retire the previous call's broadcast (non-blocking unpersist) so
+    # repeated invocations in one long-lived session hold at most ONE
+    # probe matrix per executor instead of accumulating them for the
+    # application lifetime. The newest broadcast is registered, not
+    # unpersisted, because the returned DataFrame is lazy — consumers
+    # may run it later; keyed by the object, so each concurrent call
+    # registers its own and clear_shared_frames retires it.
+    clear_shared_frames("probe_broadcast")
     bc = spark.sparkContext.broadcast((pids, pmat))
-    _PROBE_BC[spark.sparkContext.applicationId] = bc
+    shared_frame(spark, "probe_broadcast", (id(bc),), lambda: bc)
 
     def score(batches):
         b_pids, b_pmat = bc.value

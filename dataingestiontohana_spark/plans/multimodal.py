@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from dataingestiontohana_spark.catalog import (
     load_table,
     local_rows,
-    locked_frame_builder,
+    shared_frame,
 )
 from dataingestiontohana_spark.operators.multimodal import (
     _IMA_STEP_TABLE,
@@ -53,14 +53,6 @@ def q36_media_byte_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# all four media parts (decode / frames / resize / audio) consume the
-# same synthetic frame; building it four times re-runs the driver-side
-# payload synthesis and re-ships it to the executors per part. One
-# lazily-localCheckpointed frame per (application, n) is shared
-# instead, mirroring llm_dedup's edge-set cache.
-_MEDIA_CACHE: dict[tuple[str, int], DataFrame] = {}
-
-
 def _local_rows(spark: SparkSession, rows: list, slices: int) -> DataFrame:
     """Driver-built media corpus -> DataFrame with ``slices``
     partitions; see catalog.local_rows for why this is NOT
@@ -71,17 +63,18 @@ def _local_rows(spark: SparkSession, rows: list, slices: int) -> DataFrame:
     )
 
 
-@locked_frame_builder
+# all four media parts (decode / frames / resize / audio) consume the
+# same synthetic frame; building it four times re-runs the driver-side
+# payload synthesis and re-ships it to the executors per part. One
+# lazily-localCheckpointed shared frame per n instead.
 def _synthetic_media(spark: SparkSession, n: int = 64) -> DataFrame:
-    key = (spark.sparkContext.applicationId, n)
-    df = _MEDIA_CACHE.get(key)
-    if df is not None:
-        return df
-    # bound the cache: entries for stopped sessions are unreachable but
-    # would otherwise accumulate across session restarts in one process
-    # (pytest, repeated bench runs) — latest application only
-    for k in [k for k in _MEDIA_CACHE if k[0] != key[0]]:
-        _MEDIA_CACHE.pop(k, None)
+    return shared_frame(
+        spark, "synthetic_media", (n,),
+        lambda: _build_synthetic_media(spark, n),
+    )
+
+
+def _build_synthetic_media(spark: SparkSession, n: int) -> DataFrame:
     rows = []
     for i in range(n):
         kind = (
@@ -99,12 +92,7 @@ def _synthetic_media(spark: SparkSession, n: int = 64) -> DataFrame:
     # cold at sf0.001). Real media tables read from parquet with
     # size-based partitioning; this is fixture plumbing, not the
     # operator's scale shape.
-    df = (
-        _local_rows(spark, rows, 4)
-        .localCheckpoint(eager=False)
-    )
-    _MEDIA_CACHE[key] = df
-    return df
+    return _local_rows(spark, rows, 4).localCheckpoint(eager=False)
 
 
 def q37_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -172,27 +160,19 @@ def _probe_media(spark: SparkSession) -> DataFrame:
     return _local_rows(spark, rows, 2)
 
 
-# like _MEDIA_CACHE: q81 emits the hashes, q82 pairs them, and q82's
-# band self-join reads the frame twice — one lazy checkpoint instead
-# of re-running the dhash mapInPandas up to 4x per bundle action
-_DHASH_CACHE: dict[str, DataFrame] = {}
-
-
-@locked_frame_builder
+# shared like _synthetic_media: q81 emits the hashes, q82 pairs them,
+# and q82's band self-join reads the frame twice — one lazy checkpoint
+# instead of re-running the dhash mapInPandas up to 4x per bundle action
 def _dhash_frame(spark: SparkSession) -> DataFrame:
     from dataingestiontohana_spark.operators.multimodal import dhash_images
 
-    key = spark.sparkContext.applicationId
-    df = _DHASH_CACHE.get(key)
-    if df is not None:
-        return df
-    _DHASH_CACHE.clear()
-    both = _synthetic_media(spark).where(F.col("kind") == KIND_IMAGE).unionByName(
-        _probe_media(spark)
-    )
-    df = dhash_images(both).localCheckpoint(eager=False)
-    _DHASH_CACHE[key] = df
-    return df
+    def build() -> DataFrame:
+        both = _synthetic_media(spark).where(
+            F.col("kind") == KIND_IMAGE
+        ).unionByName(_probe_media(spark))
+        return dhash_images(both).localCheckpoint(eager=False)
+
+    return shared_frame(spark, "dhash_frame", (), build)
 
 
 def q81_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -241,26 +221,20 @@ def _audio_probe_media(spark: SparkSession) -> DataFrame:
     return _local_rows(spark, rows, 2)
 
 
-_AHASH_CACHE: dict[str, DataFrame] = {}
-
-
-@locked_frame_builder
 def _ahash_frame(spark: SparkSession) -> DataFrame:
     from dataingestiontohana_spark.operators.multimodal import (
         energy_hash_audio,
     )
 
-    key = spark.sparkContext.applicationId
-    df = _AHASH_CACHE.get(key)
-    if df is not None:
-        return df
-    _AHASH_CACHE.clear()
-    both = _synthetic_media(spark).where(
-        F.col("kind") == KIND_AUDIO
-    ).unionByName(_audio_probe_media(spark))
-    df = energy_hash_audio(both, n_blocks=32).localCheckpoint(eager=False)
-    _AHASH_CACHE[key] = df
-    return df
+    def build() -> DataFrame:
+        both = _synthetic_media(spark).where(
+            F.col("kind") == KIND_AUDIO
+        ).unionByName(_audio_probe_media(spark))
+        return energy_hash_audio(both, n_blocks=32).localCheckpoint(
+            eager=False
+        )
+
+    return shared_frame(spark, "ahash_frame", (), build)
 
 
 def q209_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -298,23 +272,22 @@ def q210_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # adjudicated moments are over decoded channel bytes, which DuckDB
 # recomputes from the md5 expansion (palette entries are closed-form:
 # entry k = ((k*37)%256, (k*59)%256, (k*83)%256), index = byte % 64).
-_PNG_CACHE: dict[str, DataFrame] = {}
 _PNG_W, _PNG_H = 16, 8
 
 
-@locked_frame_builder
 def _png_color_corpus(spark: SparkSession) -> DataFrame:
+    return shared_frame(
+        spark, "png_color_corpus", (), lambda: _build_png_color_corpus(spark)
+    )
+
+
+def _build_png_color_corpus(spark: SparkSession) -> DataFrame:
     import hashlib
 
     import numpy as np
 
     from dataingestiontohana_spark.operators.multimodal import encode_png
 
-    key = spark.sparkContext.applicationId
-    df = _PNG_CACHE.get(key)
-    if df is not None:
-        return df
-    _PNG_CACHE.clear()
 
     def md5_expand(mid: int, need: int) -> bytes:
         out = bytearray()
@@ -375,12 +348,7 @@ def _png_color_corpus(spark: SparkSession) -> DataFrame:
                 trns=(int(raw[0]),) * 3,
             )
         rows.append((i, KIND_IMAGE, png))
-    df = (
-        _local_rows(spark, rows, 2)
-        .localCheckpoint(eager=False)
-    )
-    _PNG_CACHE[key] = df
-    return df
+    return _local_rows(spark, rows, 2).localCheckpoint(eager=False)
 
 
 def q88_png_color(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -400,12 +368,17 @@ def q88_png_color(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_JPEG_CACHE: dict[str, DataFrame] = {}
 _JPEG_BW, _JPEG_BH = 3, 2  # mosaic of 3x2 constant 8x8 blocks (24x16 px)
 
 
-@locked_frame_builder
 def _jpeg_mosaic_corpus(spark: SparkSession) -> DataFrame:
+    return shared_frame(
+        spark, "jpeg_mosaic_corpus", (),
+        lambda: _build_jpeg_mosaic_corpus(spark),
+    )
+
+
+def _build_jpeg_mosaic_corpus(spark: SparkSession) -> DataFrame:
     """REAL JPEG streams whose decode is EXACT: each image is a mosaic
     of constant 8x8 blocks (block j = byte j of md5('{id}:jpg:0')) at
     unit quantization — a constant block's DCT is DC-only and integer,
@@ -423,11 +396,6 @@ def _jpeg_mosaic_corpus(spark: SparkSession) -> DataFrame:
         encode_jpeg_progressive,
     )
 
-    key = spark.sparkContext.applicationId
-    df = _JPEG_CACHE.get(key)
-    if df is not None:
-        return df
-    _JPEG_CACHE.clear()
     ones = np.ones(64, dtype=np.int32)
     w, h = _JPEG_BW * 8, _JPEG_BH * 8
     rows = []
@@ -561,12 +529,7 @@ def _jpeg_mosaic_corpus(spark: SparkSession) -> DataFrame:
         if groups is not None:
             kwargs["scan_groups"] = groups
         rows.append((mid, KIND_IMAGE, enc_fn(px, w, h, chans, **kwargs)))
-    df = (
-        _local_rows(spark, rows, 2)
-        .localCheckpoint(eager=False)
-    )
-    _JPEG_CACHE[key] = df
-    return df
+    return _local_rows(spark, rows, 2).localCheckpoint(eager=False)
 
 
 def q204_jpeg_mosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -592,21 +555,20 @@ def q204_jpeg_mosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stereo exactly ((l+r) floor-div 2), and recomputes the native-width
 # moments, with the 32-bit sum of squares carried through HUGEINT and
 # split hi/lo at 10^18 (two full-range squares already exceed bigint).
-_WAV_CACHE: dict[str, DataFrame] = {}
 _WAV_FRAMES = 64
 _ADPCM_BLOCKS = 2  # clips 20-23: 2 x 132-byte blocks, 257 samples each
 
 
-@locked_frame_builder
 def _wav_native_corpus(spark: SparkSession) -> DataFrame:
+    return shared_frame(
+        spark, "wav_native_corpus", (), lambda: _build_wav_native_corpus(spark)
+    )
+
+
+def _build_wav_native_corpus(spark: SparkSession) -> DataFrame:
     import hashlib
     import struct
 
-    key = spark.sparkContext.applicationId
-    df = _WAV_CACHE.get(key)
-    if df is not None:
-        return df
-    _WAV_CACHE.clear()
 
     def md5_expand(mid: int, need: int) -> bytes:
         out = bytearray()
@@ -997,12 +959,7 @@ def _wav_native_corpus(spark: SparkSession) -> DataFrame:
     vals40 = [k / float(1 << 23) for k in ks40]
     data40 = struct.pack(f"<{len(vals40)}f", *vals40)
     rows.append((40, KIND_AUDIO, ext_container(data40, 1, 32, 3)))
-    df = (
-        _local_rows(spark, rows, 2)
-        .localCheckpoint(eager=False)
-    )
-    _WAV_CACHE[key] = df
-    return df
+    return _local_rows(spark, rows, 2).localCheckpoint(eager=False)
 
 
 def q205_wav_native(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1028,23 +985,22 @@ def q205_wav_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 # md5-expanded from "{id}:png16:{chunk}" (sample j = 256*byte(2j) +
 # byte(2j+1)); the encode->decode round trip cancels so DuckDB
 # recomputes the NATIVE uint16 moments straight from the expansion.
-_PNG16_CACHE: dict[str, DataFrame] = {}
 _PNG16_CH = (1, 3, 2, 4)  # color types 0 / 2 / 4 / 6
 
 
-@locked_frame_builder
 def _png16_corpus(spark: SparkSession) -> DataFrame:
+    return shared_frame(
+        spark, "png16_corpus", (), lambda: _build_png16_corpus(spark)
+    )
+
+
+def _build_png16_corpus(spark: SparkSession) -> DataFrame:
     import hashlib
 
     import numpy as np
 
     from dataingestiontohana_spark.operators.multimodal import encode_png
 
-    key = spark.sparkContext.applicationId
-    df = _PNG16_CACHE.get(key)
-    if df is not None:
-        return df
-    _PNG16_CACHE.clear()
 
     def md5_expand(mid: int, need: int) -> bytes:
         out = bytearray()
@@ -1087,12 +1043,7 @@ def _png16_corpus(spark: SparkSession) -> DataFrame:
                 bit_depth=16, trns=(key16,) * 3,
             )
         rows.append((i, KIND_IMAGE, png))
-    df = (
-        _local_rows(spark, rows, 2)
-        .localCheckpoint(eager=False)
-    )
-    _PNG16_CACHE[key] = df
-    return df
+    return _local_rows(spark, rows, 2).localCheckpoint(eager=False)
 
 
 def q206_png16_native(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1112,11 +1063,15 @@ def q206_png16_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GIFBMP_CACHE: dict[str, DataFrame] = {}
 
 
-@locked_frame_builder
 def _gif_bmp_corpus(spark: SparkSession) -> DataFrame:
+    return shared_frame(
+        spark, "gif_bmp_corpus", (), lambda: _build_gif_bmp_corpus(spark)
+    )
+
+
+def _build_gif_bmp_corpus(spark: SparkSession) -> DataFrame:
     """REAL GIF + BMP streams whose decode is exact (r9): GIFs carry
     md5-derived palette indices through genuine LZW compression
     (plain, interlaced, and 89a-transparent variants — the alpha
@@ -1136,11 +1091,6 @@ def _gif_bmp_corpus(spark: SparkSession) -> DataFrame:
         encode_gif_frames,
     )
 
-    key = spark.sparkContext.applicationId
-    df = _GIFBMP_CACHE.get(key)
-    if df is not None:
-        return df
-    _GIFBMP_CACHE.clear()
 
     def md5_expand(mid: int, need: int) -> bytes:
         out = bytearray()
@@ -1265,12 +1215,7 @@ def _gif_bmp_corpus(spark: SparkSession) -> DataFrame:
                 pal,
             )
         rows.append((i, kind, blob))
-    df = (
-        _local_rows(spark, rows, 2)
-        .localCheckpoint(eager=False)
-    )
-    _GIFBMP_CACHE[key] = df
-    return df
+    return _local_rows(spark, rows, 2).localCheckpoint(eager=False)
 
 
 def q215_gif_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1339,11 +1284,15 @@ def q221_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CMYK_CACHE: dict[str, DataFrame] = {}
 
 
-@locked_frame_builder
 def _cmyk_corpus(spark: SparkSession) -> DataFrame:
+    return shared_frame(
+        spark, "cmyk_corpus", (), lambda: _build_cmyk_corpus(spark)
+    )
+
+
+def _build_cmyk_corpus(spark: SparkSession) -> DataFrame:
     """REAL Adobe 4-component JPEG streams whose decode is EXACT
     (r12 — closing the CMYK boundary): each clip is a 3x2 mosaic of
     constant 8x8 blocks at unit quantization (the q204 discipline),
@@ -1367,11 +1316,6 @@ def _cmyk_corpus(spark: SparkSession) -> DataFrame:
         encode_jpeg_cmyk,
     )
 
-    key = spark.sparkContext.applicationId
-    df = _CMYK_CACHE.get(key)
-    if df is not None:
-        return df
-    _CMYK_CACHE.clear()
 
     def plane(i: int, p: int) -> np.ndarray:
         vals = np.frombuffer(
@@ -1397,12 +1341,7 @@ def _cmyk_corpus(spark: SparkSession) -> DataFrame:
             app14=i != 3,
         )
         rows.append((i, KIND_IMAGE, blob))
-    df = (
-        _local_rows(spark, rows, 1)
-        .localCheckpoint(eager=False)
-    )
-    _CMYK_CACHE[key] = df
-    return df
+    return _local_rows(spark, rows, 1).localCheckpoint(eager=False)
 
 
 def q231_jpeg_cmyk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1422,11 +1361,15 @@ def q231_jpeg_cmyk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MOV_CACHE: dict[str, DataFrame] = {}
 
 
-@locked_frame_builder
 def _mov_corpus(spark: SparkSession) -> DataFrame:
+    return shared_frame(
+        spark, "mov_corpus", (), lambda: _build_mov_corpus(spark)
+    )
+
+
+def _build_mov_corpus(spark: SparkSession) -> DataFrame:
     """REAL QuickTime/MOV MJPEG movies whose decode is EXACT (r12 —
     the second video container): the q204 discipline again — frame f
     of clip i is a 3x2 constant-block mosaic at unit quantization
@@ -1448,11 +1391,6 @@ def _mov_corpus(spark: SparkSession) -> DataFrame:
         encode_mov_mjpeg,
     )
 
-    key = spark.sparkContext.applicationId
-    df = _MOV_CACHE.get(key)
-    if df is not None:
-        return df
-    _MOV_CACHE.clear()
     ones = np.ones(64, dtype=np.int32)
     w, h = _JPEG_BW * 8, _JPEG_BH * 8
 
@@ -1490,19 +1428,18 @@ def _mov_corpus(spark: SparkSession) -> DataFrame:
         for f in range(2)
     ]
     rows.append((3, KIND_VIDEO, encode_mov_mjpeg(f3, w, h)))
-    df = (
-        _local_rows(spark, rows, 1)
-        .localCheckpoint(eager=False)
-    )
-    _MOV_CACHE[key] = df
-    return df
+    return _local_rows(spark, rows, 1).localCheckpoint(eager=False)
 
 
-_TIFF_CACHE: dict[str, DataFrame] = {}
 
 
-@locked_frame_builder
 def _tiff_corpus(spark: SparkSession) -> DataFrame:
+    return shared_frame(
+        spark, "tiff_corpus", (), lambda: _build_tiff_corpus(spark)
+    )
+
+
+def _build_tiff_corpus(spark: SparkSession) -> DataFrame:
     """REAL baseline TIFF streams whose decode is EXACT (r12): every
     sample byte md5-expanded from '{i}:tiff:{c}', written by
     `encode_tiff` with real IFDs and strip tables. Media: 0 = 8-bit
@@ -1521,11 +1458,6 @@ def _tiff_corpus(spark: SparkSession) -> DataFrame:
         encode_tiff,
     )
 
-    key = spark.sparkContext.applicationId
-    df = _TIFF_CACHE.get(key)
-    if df is not None:
-        return df
-    _TIFF_CACHE.clear()
 
     def md5_expand(mid: int, need: int) -> bytes:
         out = bytearray()
@@ -1562,12 +1494,7 @@ def _tiff_corpus(spark: SparkSession) -> DataFrame:
     at = blob5.find(_s.pack("<HHI", 259, 3, 1))
     blob5[at + 8 : at + 10] = _s.pack("<H", 5)  # Compression = LZW
     rows.append((5, KIND_IMAGE, bytes(blob5)))
-    df = (
-        _local_rows(spark, rows, 1)
-        .localCheckpoint(eager=False)
-    )
-    _TIFF_CACHE[key] = df
-    return df
+    return _local_rows(spark, rows, 1).localCheckpoint(eager=False)
 
 
 def q236_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1589,11 +1516,15 @@ def q236_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_APNG_CACHE: dict[str, DataFrame] = {}
 
 
-@locked_frame_builder
 def _apng_corpus(spark: SparkSession) -> DataFrame:
+    return shared_frame(
+        spark, "apng_corpus", (), lambda: _build_apng_corpus(spark)
+    )
+
+
+def _build_apng_corpus(spark: SparkSession) -> DataFrame:
     """REAL APNG streams whose decode is EXACT (r12): md5-seeded
     frames through `encode_apng` (real zlib streams, acTL/fcTL/fdAT
     sequence numbers). Media: 0 = RGBA, two full-canvas SOURCE-blend
@@ -1614,11 +1545,6 @@ def _apng_corpus(spark: SparkSession) -> DataFrame:
         encode_apng,
     )
 
-    key = spark.sparkContext.applicationId
-    df = _APNG_CACHE.get(key)
-    if df is not None:
-        return df
-    _APNG_CACHE.clear()
 
     def md5_expand(mid: int, need: int) -> bytes:
         out = bytearray()
@@ -1660,12 +1586,7 @@ def _apng_corpus(spark: SparkSession) -> DataFrame:
         (W, H), [(g0, 0, 0, 0, 0), (g1, 0, 0, 0, 0)],
         color_type=0, first_frame_in_idat=False,
     )))
-    df = (
-        _local_rows(spark, rows, 1)
-        .localCheckpoint(eager=False)
-    )
-    _APNG_CACHE[key] = df
-    return df
+    return _local_rows(spark, rows, 1).localCheckpoint(eager=False)
 
 
 def q235_apng(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1686,11 +1607,15 @@ def q235_apng(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MOVAU_CACHE: dict[str, DataFrame] = {}
 
 
-@locked_frame_builder
 def _mov_audio_corpus(spark: SparkSession) -> DataFrame:
+    return shared_frame(
+        spark, "mov_audio_corpus", (), lambda: _build_mov_audio_corpus(spark)
+    )
+
+
+def _build_mov_audio_corpus(spark: SparkSession) -> DataFrame:
     """QuickTime 'soun'-track clips whose demux is EXACT (r12): PCM
     sample bytes md5-expanded from '{i}:movau:{c}', muxed by
     `encode_mov_audio` into real sample tables. Clips: 4 = 'sowt'
@@ -1704,11 +1629,6 @@ def _mov_audio_corpus(spark: SparkSession) -> DataFrame:
         encode_mov_audio,
     )
 
-    key = spark.sparkContext.applicationId
-    df = _MOVAU_CACHE.get(key)
-    if df is not None:
-        return df
-    _MOVAU_CACHE.clear()
 
     def expand(mid: int, need: int) -> bytes:
         out = bytearray()
@@ -1728,12 +1648,7 @@ def _mov_audio_corpus(spark: SparkSession) -> DataFrame:
         (7, KIND_AUDIO, encode_mov_audio(
             expand(7, 120), b"ima4", 1, 8)),
     ]
-    df = (
-        _local_rows(spark, rows, 1)
-        .localCheckpoint(eager=False)
-    )
-    _MOVAU_CACHE[key] = df
-    return df
+    return _local_rows(spark, rows, 1).localCheckpoint(eager=False)
 
 
 def q234_mov_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1787,7 +1702,6 @@ def q232_mov_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_AVI_CACHE: dict[str, DataFrame] = {}
 # (media_id, n_frames, channels) of the DECODING clips; clip 5 is the
 # valid-unsupported XVID entry (metadata-only by contract)
 _AVI_SPECS: tuple[tuple[int, int, int], ...] = (
@@ -1795,8 +1709,13 @@ _AVI_SPECS: tuple[tuple[int, int, int], ...] = (
 )
 
 
-@locked_frame_builder
 def _avi_corpus(spark: SparkSession) -> DataFrame:
+    return shared_frame(
+        spark, "avi_corpus", (), lambda: _build_avi_corpus(spark)
+    )
+
+
+def _build_avi_corpus(spark: SparkSession) -> DataFrame:
     """REAL RIFF/AVI MJPEG clips whose decode is EXACT (r12 — video
     columns, the last major training-data modality): every frame is a
     constant-block md5 mosaic at unit quantization (the q204
@@ -1824,11 +1743,6 @@ def _avi_corpus(spark: SparkSession) -> DataFrame:
         encode_jpeg_progressive,
     )
 
-    key = spark.sparkContext.applicationId
-    df = _AVI_CACHE.get(key)
-    if df is not None:
-        return df
-    _AVI_CACHE.clear()
     ones = np.ones(64, dtype=np.int32)
     w, h = _JPEG_BW * 8, _JPEG_BH * 8
 
@@ -1926,12 +1840,7 @@ def _avi_corpus(spark: SparkSession) -> DataFrame:
 
     rows.append((7, KIND_VIDEO, encode_avi_dib(
         [perturb(dib_frame(0)), perturb(dib_frame(1))], w, h)))
-    df = (
-        _local_rows(spark, rows, 2)
-        .localCheckpoint(eager=False)
-    )
-    _AVI_CACHE[key] = df
-    return df
+    return _local_rows(spark, rows, 2).localCheckpoint(eager=False)
 
 
 def q225_avi_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:

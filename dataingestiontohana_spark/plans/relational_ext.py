@@ -21,7 +21,7 @@ from pyspark.sql.window import Window
 from dataingestiontohana_spark.catalog import (
     load_table,
     local_rows,
-    locked_frame_builder,
+    shared_frame,
 )
 
 
@@ -665,43 +665,27 @@ ORACLES = {
 
 # q125 (pairs), q165 (item-CF) and q189 (triples) all mine the same
 # distinct (order, part) basket frame; each consumes it 2-4x through
-# self-joins and support counts. One lazily-localCheckpointed frame per
-# (application, sf_dir) — the `_exact_pairs_cached` sharing discipline —
-# so the distinct's scan+shuffle runs once per process, not ~9x.
-_BASKET_CACHE: dict = {}
-
-
-@locked_frame_builder
+# self-joins and support counts. One lazily-localCheckpointed shared
+# frame per sf_dir, so the distinct's scan+shuffle runs once per
+# process, not ~9x.
 def _basket_items_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _BASKET_CACHE.get(key)
-    if df is None:
-        df = (
-            _t(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_partkey")
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        _BASKET_CACHE[key] = df
-    return df
+    return shared_frame(spark, "basket_items", (sf_dir,), lambda: (
+        _t(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+        .localCheckpoint(eager=False)
+    ))
 
 
 # The basket PAIR COUNTS (pa < pb, c_ab) and the per-item supports are
 # recomputed identically by q125 (pair mining), q165 (item-item CF)
 # and q189 (the apriori item prune) — the pair self-join + aggregation
-# is the most expensive stage of both pair consumers. Same sharing
-# discipline as _BASKET_CACHE: one lazily-localCheckpointed frame per
-# (application, sf_dir), materialized by whichever part acts first.
-_BASKET_PAIRS_CACHE: dict = {}
-_ITEM_SUPPORT_CACHE: dict = {}
-
-
-@locked_frame_builder
+# is the most expensive stage of both pair consumers. Shared like the
+# basket items, materialized by whichever part acts first.
 def _basket_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(pa, pb, c_ab) with pa < pb over the distinct basket items."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _BASKET_PAIRS_CACHE.get(key)
-    if df is None:
+
+    def build() -> DataFrame:
         items = _basket_items_cached(spark, sf_dir)
         a = items.select(
             F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pa")
@@ -709,31 +693,25 @@ def _basket_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         b = items.select(
             F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pb")
         )
-        df = (
+        return (
             a.join(b, "k")
             .where(F.col("pa") < F.col("pb"))
             .groupBy("pa", "pb")
             .agg(F.count(F.lit(1)).cast("long").alias("c_ab"))
             .localCheckpoint(eager=False)
         )
-        _BASKET_PAIRS_CACHE[key] = df
-    return df
+
+    return shared_frame(spark, "basket_pairs", (sf_dir,), build)
 
 
-@locked_frame_builder
 def _item_support_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(l_partkey, c) — distinct-basket support per item."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _ITEM_SUPPORT_CACHE.get(key)
-    if df is None:
-        df = (
-            _basket_items_cached(spark, sf_dir)
-            .groupBy("l_partkey")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            .localCheckpoint(eager=False)
-        )
-        _ITEM_SUPPORT_CACHE[key] = df
-    return df
+    return shared_frame(spark, "item_support", (sf_dir,), lambda: (
+        _basket_items_cached(spark, sf_dir)
+        .groupBy("l_partkey")
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+        .localCheckpoint(eager=False)
+    ))
 
 
 def q125_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -11,5 +11,11 @@ SF01 = "/root/testdata/sf0.1"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pytest", shuffle_partitions=8)
+    # get_spark's default 24g max heap exceeds a 15 GB host's memory:
+    # the suite's JVM grew to 15.6 GB and was OOM-killed mid-run, failing
+    # every later test. The suite's data needs far less.
+    s = get_spark(
+        "pytest", shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": "6g"},
+    )
     yield s
