@@ -5,13 +5,51 @@ configs hold (AQE handles runtime re-planning, skew joins, partition
 coalescing). Shuffle partitions default to the local core count but are
 meant to be overridden (`spark.sql.shuffle.partitions`) at cluster scale
 to ~2-3x total executor cores.
+
+Where Spark's Python processes import pyspark from: Spark puts
+``$SPARK_HOME/python/lib/pyspark.zip`` (and the py4j zip) first on
+every Python worker's path — the daemon and its forked UDF/read/planner
+workers, and the streaming source runner started at every query start
+and restart. That zip holds no bytecode, so each fresh process compiled
+pyspark from source (0.8-1.2 s). `get_spark` adds the package's
+``_pyworker`` directory to ``spark.executorEnv.PYTHONPATH``; its
+``sitecustomize`` moves the zips behind the installed pyspark the driver
+imports, which ships compiled bytecode — only when the versions match.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
+
+# start-up hook for Spark's Python processes (see the module docstring)
+_PYWORKER = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_pyworker")
+_WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+
+
+def _with_worker_hook(options: dict[str, str]) -> dict[str, str]:
+    """`options` with the hook directory appended to the workers'
+    PYTHONPATH. The caller's value stays and comes first, so a
+    sitecustomize of theirs is never shadowed: the one in `options`,
+    else the one Spark's own configuration sets (spark-defaults.conf,
+    ``spark-submit --conf``), which a builder option would replace."""
+    conf = dict(options)
+    user = conf.get(_WORKER_PYTHONPATH)
+    if user is None:
+        # those files reach Python only as the JVM's system properties:
+        # start the JVM with the session's options, as getOrCreate
+        # would, and read them back
+        SparkContext._ensure_initialized(
+            conf=SparkConf(loadDefaults=False).setAll(conf.items())
+        )
+        user = SparkConf().get(_WORKER_PYTHONPATH)
+    entries = [p for p in (user or "").split(os.pathsep) if p]
+    conf[_WORKER_PYTHONPATH] = os.pathsep.join(
+        entries + [_PYWORKER] * (_PYWORKER not in entries)
+    )
+    return conf
 
 
 def get_spark(
@@ -33,19 +71,19 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
 
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+    options = {
+        "spark.master": master,
+        "spark.app.name": app_name,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # files.maxPartitionBytes default 128MB is right for the 100TB
         # target; local parquet is far smaller than one partition anyway.
-        .config("spark.ui.enabled", "false")
+        "spark.ui.enabled": "false",
         # PySpark's DataFrame-debugging hook (default on) walks the
         # Python stack and makes two extra py4j calls on EVERY
         # DataFrame operation, purely to enrich error messages with
@@ -54,10 +92,12 @@ def get_spark(
         # driver-side plan-construction time at sf0.1 with it off
         # (guide §5: keep the driver out of the hot path). Purely
         # diagnostic metadata; no plan or result changes.
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-    )
-    for k, v in (extra_conf or {}).items():
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+        **(extra_conf or {}),
+    }
+    builder = SparkSession.builder
+    for k, v in _with_worker_hook(options).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

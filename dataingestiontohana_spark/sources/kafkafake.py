@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import base64
 import hashlib
+import itertools
 import json
 import os
 import time
@@ -201,11 +202,15 @@ class FakeKafkaBroker:
             return 0
 
     def _log_len(self, topic: str, partition: int) -> int:
+        """Complete lines (= records) in the log: a record is a
+        newline-terminated line, so an unterminated tail counts once
+        its newline lands."""
         f = os.path.join(self.path, topic, f"p-{partition}.jsonl")
         if not os.path.exists(f):
             return 0
-        with open(f) as fh:
-            return sum(1 for _ in fh)
+        with open(f, "rb") as fh:
+            chunks = iter(lambda: fh.read(1 << 20), b"")
+            return sum(chunk.count(b"\n") for chunk in chunks)
 
     def end_offsets(self, topic: str) -> dict[str, int]:
         return {
@@ -221,11 +226,7 @@ def _read_slice(
     if not os.path.exists(f):
         return rows
     with open(f) as fh:
-        for off, line in enumerate(fh):
-            if off >= hi:
-                break
-            if off < lo:
-                continue
+        for off, line in enumerate(itertools.islice(fh, lo, hi), lo):
             rec = json.loads(line)
             rows.append(
                 (

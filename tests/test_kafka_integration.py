@@ -690,3 +690,38 @@ def test_trigger_budget_apportioning_invariants_hypothesis(tmp_path):
             )
 
     check()
+
+
+def test_end_offsets_count_complete_lines(tmp_path):
+    """latestOffset's end offsets equal a recount of every log's lines;
+    an unterminated tail is not a record until its newline lands."""
+    from dataingestiontohana_spark.sources.kafkafake import (
+        FakeKafkaBroker,
+        FakeKafkaStreamReader,
+    )
+
+    broker_dir = str(tmp_path / "broker")
+    producer = FakeKafkaBroker(broker_dir)
+    producer.create_topic("t", partitions=2)
+    reader = FakeKafkaStreamReader({"path": broker_dir, "topic": "t"})
+    logs = {p: tmp_path / "broker" / "t" / f"p-{p}.jsonl" for p in (0, 1)}
+
+    def recount() -> dict:
+        return {
+            str(p): sum(1 for _ in open(f)) for p, f in logs.items()
+        }
+
+    producer.produce_many(
+        "t", [f"v{i}" for i in range(30)], keys=[f"k{i % 7}" for i in range(30)]
+    )
+    producer.produce("t", "single", partition=1)
+    full = recount()
+    assert sum(full.values()) == 31
+    assert reader.latestOffset() == full
+
+    with open(logs[0], "a") as fh:
+        fh.write('{"k": null, "v": "eQ==", "ts": 0}\n{"k": null, "v": "dGFpbA==", ')
+    assert reader.latestOffset()["0"] == full["0"] + 1
+    with open(logs[0], "a") as fh:
+        fh.write('"ts": 0}\n')
+    assert reader.latestOffset() == recount()
