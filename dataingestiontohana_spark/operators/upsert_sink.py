@@ -215,9 +215,7 @@ def _execute_rows(con, sql: str, rows: Iterable[tuple], batch_size: int) -> None
 
 
 def _commit(con) -> None:
-    commit = getattr(con, "commit", None)
-    if callable(commit):
-        try:
-            commit()
-        except Exception:  # duckdb autocommits; commit() may raise
-            pass
+    # a failed commit (e.g. SQLite "database is locked") must fail the
+    # batch: swallowing it would let the stream commit offsets for rows
+    # that never landed
+    con.commit()

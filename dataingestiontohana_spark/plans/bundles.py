@@ -1275,11 +1275,12 @@ def _sql_normalize(part: str, widths: dict[str, int]) -> str:
 # time BEFORE the first task runs — measured 10.4 s build vs 7.1 s
 # execute for q20_84_timegrain at sf0.1 (guide §5: the driver should
 # do almost no data work; §2.6 sanctions driver thread pools). Part
-# construction is independent (immutable DataFrames; shared-frame
-# cache getters serialize on per-getter locks), so a small
-# pool overlaps the analysis: measured 8.1 s -> 3.1 s for the same
-# bundle. The union fold stays ordered — pool.map preserves part
-# order, so the bundle's rows and the oracle's UNION ALL agree.
+# construction is independent (immutable DataFrames; catalog.
+# shared_frame holds one lock per key, so concurrent parts build each
+# shared frame once), so a small pool overlaps the analysis: measured
+# 8.1 s -> 3.1 s for the same bundle. The union fold stays ordered —
+# pool.map preserves part order, so the bundle's rows and the oracle's
+# UNION ALL agree.
 _BUILD_THREADS = 8
 
 

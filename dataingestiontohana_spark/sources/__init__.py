@@ -15,5 +15,4 @@ from dataingestiontohana_spark.sources.kafkafake import (  # noqa: F401
     fake_kafka_source,
     read_fake_topic,
     register_fake_kafka,
-    write_stream_to_fake_kafka,
 )

@@ -599,29 +599,3 @@ def executor_producer(path: str, topic: str):
             b.produce_many(topic, vals, keys=keys if keyed else None)
 
     return _produce
-
-
-def write_stream_to_fake_kafka(
-    df: DataFrame, path: str, topic: str, checkpoint_dir: str
-):
-    """writeStream into a fake topic — the producer half (R3). Each
-    micro-batch produces EXECUTOR-SIDE via foreachPartition (see
-    `executor_producer`); the driver never materializes the batch.
-    Like the real Kafka sink this is AT-LEAST-ONCE: a batch replayed
-    after a crash appends again (Kafka's sink has no idempotent-producer
-    mode in Spark either); exactly-once lands downstream on the keyed
-    upsert, not in the broker."""
-    cols = df.columns
-    FakeKafkaBroker(path).create_topic(topic)  # driver-side, once
-
-    def append(batch_df: DataFrame, _epoch: int) -> None:
-        proj = ["value"] + (["key"] if "key" in cols else [])
-        batch_df.select(*proj).foreachPartition(
-            executor_producer(path, topic)
-        )
-
-    return (
-        df.writeStream.foreachBatch(append)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )

@@ -1,4 +1,5 @@
-"""Operator-GRAPH pipelines: the reference's actual programming model.
+"""Operator-GRAPH pipelines: the reference's actual programming model,
+and the engine's one micro-batch runner for sensor ingest.
 
 The reference (Andyyh2005/DataIngestionToHANA) is an SAP Data
 Intelligence tutorial whose artifacts are two *visual operator graphs*
@@ -8,30 +9,48 @@ Consumer -> Processing Data -> HANA Client` with a `Simulate Error`
 stage and `Terminal` taps. Everything else in this engine re-expresses
 the *operators*; this module re-expresses the *composition model*:
 declare nodes and edges, validate the wiring, compile to ONE
-Structured Streaming query.
+Structured Streaming query. `streaming/pipeline.py::IngestionPipeline`
+is a fixed wiring of this graph (`data_generator -> process ->
+hana_client`).
 
 Compilation strategy: the single source node becomes the streaming
 DataFrame; every downstream node becomes a closure applied inside one
-`foreachBatch` walk of the DAG (the same shape as
-`streaming/multiplex.py` — a multiplexer persists the batch once and
-fans out, so source/parse cost is paid once per batch regardless of
-fan-out). That preserves the delivery guarantees of
-`streaming/pipeline.py`: one checkpoint governs the whole graph, a
-sink failure fails the batch (all-or-nothing replay), and keyed upsert
-sinks make replay idempotent (exactly-once, `README.md:132-155`).
+`foreachBatch` walk of the DAG (a multiplexer persists the batch once
+and fans out, so source/parse cost is paid once per batch regardless of
+fan-out). One checkpoint governs the whole graph, a sink failure fails
+the batch (all-or-nothing replay), and keyed upsert sinks make replay
+idempotent (exactly-once, `README.md:132-155`).
+
+The hana_client's `mode` is the reference's delivery-guarantee switch
+(its HANA Client INSERT/UPSERT setting plus the consumer's commit
+policy):
+
+- EXACTLY_ONCE  — checkpointed offsets + keyed UPSERT on the key
+  columns into a PK table (`README.md:132-155`): replay after failure
+  converges, no loss/dups.
+- AT_LEAST_ONCE — checkpointed offsets + plain INSERT into a table
+  without a PK (`README.md:103-130`): offsets advance only after the
+  sink succeeds (the by-hand Wiretap->ack loop of the reference is
+  exactly what the checkpoint commit log automates), so a crash between
+  DB write and offset commit replays the batch => duplicates possible,
+  loss impossible.
+- AT_MOST_ONCE  — lab mode (`README.md:71-99`): a failed write (an
+  injected FAIL_WRITE or an error from `sink.write`) is swallowed, so
+  the batch commits regardless of DB success, reproducing the
+  reference's auto-commit-on loss.
 
 Node kinds and their reference counterparts:
 
 | kind             | ref | role      | config |
 |------------------|-----|-----------|--------|
-| `data_generator` | R1  | source    | `source_dir` (csv text files), `max_files_per_trigger` |
+| `data_generator` | R1  | source    | EITHER `source_dir` (csv text files; `max_files_per_trigger`, default 1) OR `fn: SparkSession -> streaming DataFrame` (a live binding, e.g. the sensorgen Python Data Source) |
 | `kafka_consumer` | R4  | source    | `path`, `topic` (kafkafake transport; swap for the connector in a cluster) |
 | `multiplexer`    | R2  | fan-out   | — (the ONLY node allowed >1 downstream edge) |
 | `process`        | R5  | transform | EITHER `fn: DataFrame -> DataFrame` (a live binding) OR `sql: str` referencing the input as `{input}` (e.g. `SELECT * FROM {input} WHERE ...`). SQL transforms serialize INLINE in graph JSON — the reference's graph.json embeds its custom operators' scripts the same way — so a SQL-only graph needs no `$ref` bindings at load time. |
 | `wiretap`        | R9  | tap       | `wiretap: Wiretap` (defaults to a fresh one) |
 | `simulate_error` | R8  | tap       | `fault: FaultInjector` |
 | `kafka_producer` | R3  | sink      | `topic` + either `brokers` (real connector, executor-side batch produce) or `path` (kafkafake transport, executor-side foreachPartition appends); at-least-once either way, like the real connector. No driver collect on any path. |
-| `hana_client`    | R6  | sink      | `sink: UpsertSink`, `upsert: bool`, `columns` for ensure_table |
+| `hana_client`    | R6  | sink      | `sink: UpsertSink`, `mode: DeliveryMode` or its string value (default exactly-once, see above), `fault: FaultInjector` fired inside the sink step, `columns` for ensure_table |
 | `terminal`       | R7  | sink      | `limit` rows retained driver-side |
 
 Validation enforces the reference editor's wiring rules mechanically:
@@ -43,8 +62,10 @@ tutorial itself applies), every leaf a sink, no cycles, no orphans.
 from __future__ import annotations
 
 import hashlib
+import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from enum import Enum
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,6 +73,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from dataingestiontohana_spark.operators.upsert_sink import UpsertSink
+from dataingestiontohana_spark.sources.generator import SENSOR_FIELDS
 from dataingestiontohana_spark.sources.kafkafake import (
     FakeKafkaBroker,
     bootstrap_group_hint,
@@ -60,8 +82,10 @@ from dataingestiontohana_spark.sources.kafkafake import (
 )
 from dataingestiontohana_spark.streaming.kafka import write_batch_to_kafka
 from dataingestiontohana_spark.streaming.fault import FaultInjector
-from dataingestiontohana_spark.streaming.multiplex import Wiretap
-from dataingestiontohana_spark.streaming.pipeline import SENSOR_SQL_COLUMNS
+
+SENSOR_SQL_COLUMNS = [
+    (n, "INTEGER" if t == "int" else "DOUBLE") for n, t in SENSOR_FIELDS
+]
 
 SOURCE_KINDS = {"data_generator", "kafka_consumer"}
 TRANSFORM_KINDS = {"process", "wiretap", "simulate_error", "multiplexer"}
@@ -71,6 +95,36 @@ KINDS = SOURCE_KINDS | TRANSFORM_KINDS | SINK_KINDS
 
 class GraphValidationError(ValueError):
     """The graph violates a wiring rule the reference editor enforces."""
+
+
+class DeliveryMode(Enum):
+    AT_MOST_ONCE = "at_most_once"
+    AT_LEAST_ONCE = "at_least_once"
+    EXACTLY_ONCE = "exactly_once"
+
+
+@dataclass
+class WiretapEntry:
+    epoch_id: int
+    n_rows: int
+    wall_clock: float
+
+
+@dataclass
+class Wiretap:
+    """Pass-through trace (R9, `README.md:64`): counts each micro-batch
+    and timestamps it. The ack role the reference wires through the
+    wiretap is obsolete here: the checkpoint commits offsets after sink
+    success (SURVEY §2.1 R9)."""
+
+    name: str = "wiretap"
+    entries: list[WiretapEntry] = field(default_factory=list)
+
+    def tap(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
+        self.entries.append(
+            WiretapEntry(epoch_id, batch_df.count(), time.time())
+        )
+        return batch_df
 
 
 @dataclass
@@ -121,6 +175,14 @@ class PipelineGraph:
                 f"one source node, got {len(sources)}: {sorted(sources)}"
             )
         for name, nd in self.nodes.items():
+            if nd.kind == "data_generator" and (
+                ("fn" in nd.config) == ("source_dir" in nd.config)
+            ):
+                raise GraphValidationError(
+                    f"data_generator node {name!r} needs exactly one of "
+                    f"'source_dir' (csv text files) or 'fn' (a "
+                    f"SparkSession -> streaming DataFrame binding)"
+                )
             if nd.kind == "process":
                 has_fn = "fn" in nd.config
                 has_sql = "sql" in nd.config
@@ -217,7 +279,7 @@ class CompiledGraph:
                 sink: UpsertSink = nd.config["sink"]
                 sink.ensure_table(
                     nd.config.get("columns", SENSOR_SQL_COLUMNS),
-                    with_pk=nd.config.get("upsert", True),
+                    with_pk=_mode(nd) is DeliveryMode.EXACTLY_ONCE,
                 )
             if nd.kind == "kafka_producer" and not nd.config.get("brokers"):
                 # sandbox transport: create the topic ONCE, driver-side
@@ -238,6 +300,8 @@ class CompiledGraph:
 
     def _source_stream(self) -> DataFrame:
         nd = self._source
+        if nd.kind == "data_generator" and "fn" in nd.config:
+            return nd.config["fn"](self.spark)
         if nd.kind == "data_generator":
             return (
                 self.spark.readStream.format("text")
@@ -349,18 +413,27 @@ class CompiledGraph:
             )
         if nd.kind == "hana_client":
             sink: UpsertSink = nd.config["sink"]
-            upsert = nd.config.get("upsert", True)
+            mode = _mode(nd)
+            upsert = mode is DeliveryMode.EXACTLY_ONCE
             # optional lifecycle fault (the R8 Simulate Error node can
             # only precede the sink in the DAG; the interesting crash —
             # AFTER the DB write, BEFORE the offset commit — needs a
-            # hook inside the sink step, same as streaming/pipeline.py)
+            # hook inside the sink step)
             fault = nd.config.get("fault")
 
             def run_sink(bdf: DataFrame, _e: int) -> None:
                 if fault:
                     fault.check(FaultInjector.BEFORE_WRITE)
-                    fault.check(FaultInjector.FAIL_WRITE)
-                sink.write(bdf, upsert=upsert)
+                try:
+                    if fault:
+                        fault.check(FaultInjector.FAIL_WRITE)
+                    sink.write(bdf, upsert=upsert)
+                except Exception:
+                    if mode is DeliveryMode.AT_MOST_ONCE:
+                        # lab mode: commit the offset range anyway =>
+                        # loss, mirroring auto-commit-on (README.md:94-97)
+                        return
+                    raise
                 if fault:
                     fault.check(FaultInjector.AFTER_WRITE)
 
@@ -428,8 +501,8 @@ class CompiledGraph:
 
     def run_to_completion(self) -> Exception | None:
         """Start, drain all available input, stop; returns the failure
-        (e.g. an InjectedFault) instead of raising — the kill/restart
-        harness shape of streaming/pipeline.py."""
+        (e.g. an InjectedFault) instead of raising, so harness code can
+        restart-and-assert like the reference protocol (§5.1)."""
         q = self.start()
         try:
             q.processAllAvailable()
@@ -441,6 +514,12 @@ class CompiledGraph:
         except Exception:  # noqa: BLE001
             pass
         return q.exception()
+
+
+def _mode(nd: Node) -> DeliveryMode:
+    """A hana_client's delivery mode: a DeliveryMode, or its string
+    value when the graph was loaded from JSON."""
+    return DeliveryMode(nd.config.get("mode", DeliveryMode.EXACTLY_ONCE))
 
 
 def run_graphs_concurrently(
@@ -491,12 +570,15 @@ def _json_safe(v: Any) -> bool:
 
 
 def graph_to_dict(graph: PipelineGraph) -> dict:
-    """JSON-serializable spec of the graph: wiring + scalar config;
-    live objects become {"$ref": "<node>.<key>"} placeholders."""
+    """JSON-serializable spec of the graph: wiring + scalar config (a
+    DeliveryMode as its string value); live objects become
+    {"$ref": "<node>.<key>"} placeholders."""
     nodes = []
     for nd in graph.nodes.values():
         cfg: dict[str, Any] = {}
         for k, v in nd.config.items():
+            if isinstance(v, DeliveryMode):
+                v = v.value
             cfg[k] = v if _json_safe(v) else {"$ref": f"{nd.name}.{k}"}
         nodes.append({"name": nd.name, "kind": nd.kind, "config": cfg})
     return {"nodes": nodes, "edges": [[s, d] for s, d in graph.edges]}

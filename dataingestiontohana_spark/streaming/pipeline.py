@@ -2,21 +2,11 @@
 as Structured Streaming (`/root/reference/README.md:27-65`):
 
     Kafka Consumer -> Processing Data -> HANA Client (-> ack loop)
-       =>  readStream -> parse_sensor_csv -> foreachBatch(upsert sink)
+       =>  data_generator -> process(parse_sensor_csv) -> hana_client
 
-with the three delivery guarantees as a mode switch:
-
-- EXACTLY_ONCE  — checkpointed offsets + keyed UPSERT on `counter`
-  (`README.md:132-155`): replay after failure converges, no loss/dups.
-- AT_LEAST_ONCE — checkpointed offsets + plain INSERT append
-  (`README.md:103-130`): offsets advance only after the sink succeeds
-  (Structured Streaming's native contract — the by-hand Wiretap->ack
-  loop of the reference is exactly what the checkpoint commit log
-  automates), so a crash between DB write and offset commit replays
-  the batch => duplicates possible, loss impossible.
-- AT_MOST_ONCE  — lab mode (`README.md:71-99`): sink errors are
-  swallowed so the batch is committed regardless of DB success,
-  reproducing the reference's auto-commit-on loss behavior.
+a fixed wiring of `streaming/graph_pipeline.py::PipelineGraph`, which
+runs it and owns the three delivery guarantees (`DeliveryMode`, see
+that module's docstring).
 
 The 5-second "Processing Data" sleep (operator R5, `README.md:30-43`)
 exists in the reference only to widen the failure window; its engine
@@ -27,26 +17,20 @@ counterparts are trigger pacing (`trigger(processingTime=...)`) and
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
-from enum import Enum
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from dataingestiontohana_spark.operators.upsert_sink import UpsertSink
 from dataingestiontohana_spark.sources.csv_envelope import parse_sensor_csv
-from dataingestiontohana_spark.sources.generator import SENSOR_FIELDS
 from dataingestiontohana_spark.streaming.fault import FaultInjector
-
-SENSOR_SQL_COLUMNS = [
-    (n, "INTEGER" if t == "int" else "DOUBLE") for n, t in SENSOR_FIELDS
-]
-
-
-class DeliveryMode(Enum):
-    AT_MOST_ONCE = "at_most_once"
-    AT_LEAST_ONCE = "at_least_once"
-    EXACTLY_ONCE = "exactly_once"
+from dataingestiontohana_spark.streaming.graph_pipeline import (  # noqa: F401
+    SENSOR_SQL_COLUMNS,
+    CompiledGraph,
+    DeliveryMode,
+    PipelineGraph,
+)
 
 
 @dataclass
@@ -60,7 +44,6 @@ class IngestionPipeline:
     mode: DeliveryMode = DeliveryMode.EXACTLY_ONCE
     max_files_per_trigger: int = 1
     fault: FaultInjector | None = None
-    queries_seen: list[int] = field(default_factory=list)
     # Optional replacement source producing ALREADY-TYPED sensor rows
     # (e.g. the registered "sensorgen" Python Data Source via
     # sources.pyds.sensor_source_stream). When set, source_dir is
@@ -70,59 +53,24 @@ class IngestionPipeline:
     # proves for the custom source's offset determinism.
     typed_source: Callable[[SparkSession], DataFrame] | None = None
 
-    def source_stream(self) -> DataFrame:
+    def _compile(self) -> CompiledGraph:
+        """Wire the graph and compile it, which creates the sink table
+        (with a primary key only under EXACTLY_ONCE)."""
+        g = PipelineGraph()
         if self.typed_source is not None:
-            return self.typed_source(self.spark)
-        return (
-            self.spark.readStream.format("text")
-            .option("maxFilesPerTrigger", str(self.max_files_per_trigger))
-            .load(self.source_dir)
-        )
-
-    def _write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if self.typed_source is not None:
-            typed = batch_df
+            upstream = g.node("source", "data_generator", fn=self.typed_source)
         else:
-            typed = parse_sensor_csv(batch_df, "value")
-        fault = self.fault
-        if fault:
-            fault.check(FaultInjector.BEFORE_WRITE)
-        try:
-            if fault:
-                fault.check(FaultInjector.FAIL_WRITE)
-            self.sink.write(typed, upsert=self.mode is DeliveryMode.EXACTLY_ONCE)
-        except Exception:
-            if self.mode is DeliveryMode.AT_MOST_ONCE:
-                # lab mode: commit the offset range anyway => loss,
-                # mirroring auto-commit-on (README.md:94-97)
-                return
-            raise
-        if fault:
-            fault.check(FaultInjector.AFTER_WRITE)
+            g.node("source", "data_generator", source_dir=self.source_dir,
+                   max_files_per_trigger=self.max_files_per_trigger)
+            upstream = g.node("parse", "process", fn=parse_sensor_csv)
+            g.connect("source", upstream)
+        g.node("hana", "hana_client", sink=self.sink, fault=self.fault,
+               mode=self.mode)
+        g.connect(upstream, "hana")
+        return g.compile(self.spark, self.checkpoint_dir)
 
     def start(self) -> StreamingQuery:
-        self.sink.ensure_table(
-            SENSOR_SQL_COLUMNS, with_pk=self.mode is DeliveryMode.EXACTLY_ONCE
-        )
-        return (
-            self.source_stream()
-            .writeStream.foreachBatch(self._write_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .start()
-        )
+        return self._compile().start()
 
     def run_to_completion(self) -> Exception | None:
-        """Start, drain all available input, stop. Returns the failure
-        (e.g. an injected fault) instead of raising, so harness code can
-        restart-and-assert like the reference protocol (§5.1)."""
-        q = self.start()
-        try:
-            q.processAllAvailable()
-        except Exception:
-            pass
-        try:
-            q.stop()
-            q.awaitTermination(30)
-        except Exception:
-            pass
-        return q.exception()
+        return self._compile().run_to_completion()

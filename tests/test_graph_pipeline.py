@@ -5,11 +5,15 @@ plus the wiring rules the visual editor enforces."""
 
 from __future__ import annotations
 
+import ast
 import functools
+import json
 import sqlite3
+from pathlib import Path
 
 import pytest
 
+import dataingestiontohana_spark as pkg
 from dataingestiontohana_spark.operators.upsert_sink import (
     SQLiteDialect,
     UpsertSink,
@@ -24,8 +28,11 @@ from dataingestiontohana_spark.streaming.fault import (
     InjectedFault,
 )
 from dataingestiontohana_spark.streaming.graph_pipeline import (
+    DeliveryMode,
     GraphValidationError,
     PipelineGraph,
+    graph_from_dict,
+    graph_to_dict,
 )
 from dataingestiontohana_spark.streaming.kafka import parse_sensor_kafka
 
@@ -88,6 +95,39 @@ def test_rejects_dangling_transform_and_orphan():
     g2.connect("p2", "p1")
     with pytest.raises(GraphValidationError, match="unreachable"):
         g2.validate()
+
+
+def test_data_generator_needs_source_dir_xor_fn():
+    for cfg in ({}, {"source_dir": "x", "fn": lambda spark: None}):
+        g = PipelineGraph()
+        g.node("gen", "data_generator", **cfg)
+        g.node("t", "terminal")
+        g.connect("gen", "t")
+        with pytest.raises(GraphValidationError, match="exactly one of"):
+            g.validate()
+
+
+def test_one_micro_batch_runner():
+    """Sensor ingest has ONE foreachBatch runner, CompiledGraph: a
+    hand-written second runner re-implements (and drifts from) the
+    graph's fan-out, fault hooks and delivery modes. media.py's
+    decode-to-list demo sink is a different concern."""
+    root = Path(pkg.__file__).parent
+    allowed = {"graph_pipeline.py", "media.py"}
+    found = []
+    for path in sorted([*root.joinpath("streaming").rglob("*.py"),
+                        *root.joinpath("sources").rglob("*.py")]):
+        if path.name in allowed:
+            continue
+        text = path.read_text()
+        found += [
+            f"{path.parent.name}/{path.name}:{n.lineno}"
+            for n in ast.walk(ast.parse(text, filename=str(path)))
+            if isinstance(n, ast.Attribute) and n.attr == "foreachBatch"
+        ]
+        if "foreachBatch(" in text:
+            found.append(f"{path.parent.name}/{path.name} (text)")
+    assert not found, f"foreachBatch runners outside PipelineGraph: {found}"
 
 
 def test_rejects_cycle_and_sink_output():
@@ -273,6 +313,76 @@ def test_consumer_graph_replay_window_after_write_crash(
     assert (a.n_rows, a.uniq, a.span) == (N_ROWS, N_ROWS, N_ROWS)
 
 
+# ------------------------------------------------------- delivery modes
+
+BATCH = 10  # records per trigger: N_ROWS // BATCH batches
+
+
+@pytest.mark.parametrize("mode,via_json", [
+    (DeliveryMode.EXACTLY_ONCE, False),
+    (DeliveryMode.AT_LEAST_ONCE, False),
+    (DeliveryMode.AT_MOST_ONCE, False),
+    (DeliveryMode.AT_LEAST_ONCE, True),
+], ids=["exactly_once", "at_least_once", "at_most_once",
+        "at_least_once-json"])
+def test_hana_client_delivery_modes(spark, tmp_path, source_dir, mode,
+                                    via_json):
+    """The hana_client's `mode` gives the audit outcomes of
+    test_streaming_delivery.py: a crash after the write of batch 1
+    (before its offset commit) and a restart converge under exactly-
+    once and duplicate that batch under at-least-once; a failed write
+    of batch 1 under at-most-once commits its offsets and loses it."""
+    broker_path = _fill_topic(spark, tmp_path, source_dir)
+    ckpt = str(tmp_path / "ckpt_consume")
+
+    def graph(fault=None) -> PipelineGraph:
+        sink = make_sink(str(tmp_path / "sink.db"))
+        g = PipelineGraph()
+        g.node("consumer", "kafka_consumer", path=broker_path,
+               topic="sensor", max_offsets_per_trigger=BATCH)
+        g.node("typed", "process", fn=parse_sensor_kafka)
+        g.node("hana", "hana_client", sink=sink, fault=fault, mode=mode)
+        g.connect("consumer", "typed")
+        g.connect("typed", "hana")
+        if not via_json:
+            return g
+        spec = json.loads(json.dumps(graph_to_dict(g)))
+        assert spec["nodes"][2]["config"]["mode"] == "at_least_once"
+        return graph_from_dict(spec, refs={
+            "typed.fn": parse_sensor_kafka, "hana.sink": sink,
+            "hana.fault": fault,
+        })
+
+    point = (FaultInjector.FAIL_WRITE if mode is DeliveryMode.AT_MOST_ONCE
+             else FaultInjector.AFTER_WRITE)
+    fault = FaultInjector(str(tmp_path / "flag"), point=point, at_batch=1)
+    fault.arm()
+    err = graph(fault).compile(spark, ckpt).run_to_completion()
+    if mode is DeliveryMode.AT_MOST_ONCE:
+        assert err is None  # the stream survives; the batch does not
+    else:
+        assert isinstance(err, Exception)  # killed after batch 1's write
+        assert graph().compile(spark, ckpt).run_to_completion() is None
+
+    con = sqlite3.connect(str(tmp_path / "sink.db"))
+    try:
+        a = audit_sink(con, "sensor_sink")
+    finally:
+        con.close()
+    if mode is DeliveryMode.EXACTLY_ONCE:
+        assert a.exactly_once and a.n_rows == N_ROWS
+    elif mode is DeliveryMode.AT_LEAST_ONCE:
+        assert not a.has_loss and a.has_duplicates
+        assert a.uniq == a.span == N_ROWS
+        assert a.n_rows == N_ROWS + BATCH  # the replayed batch, twice
+    else:
+        # exactly one batch lost, no duplicates (not a.has_loss: which
+        # counters a batch holds depends on the producer's concurrent
+        # partition appends, so the lost batch may sit at the key span's
+        # edge, where it leaves no gap)
+        assert a.n_rows == a.uniq == N_ROWS - BATCH
+
+
 # ------------------------------------------------------- JSON specs
 
 
@@ -280,13 +390,6 @@ def test_graph_json_round_trip_and_compile(spark, tmp_path, source_dir):
     """A graph serializes to a JSON document (the reference's at-rest
     form), reloads with live bindings via $ref, and the reloaded graph
     compiles and runs identically."""
-    import json
-
-    from dataingestiontohana_spark.streaming.graph_pipeline import (
-        graph_from_dict,
-        graph_to_dict,
-    )
-
     broker_path = str(tmp_path / "broker")
     g = PipelineGraph()
     g.node("gen", "data_generator", source_dir=source_dir,
@@ -314,13 +417,6 @@ def test_graph_json_ref_binding(spark, tmp_path, source_dir):
     """Live objects (a process fn) serialize as $ref placeholders and
     must be re-bound at load; a missing binding fails AT LOAD with the
     reference's name."""
-    import json
-
-    from dataingestiontohana_spark.streaming.graph_pipeline import (
-        graph_from_dict,
-        graph_to_dict,
-    )
-
     g = PipelineGraph()
     g.node("gen", "data_generator", source_dir=source_dir)
     g.node("up", "process", fn=lambda df: df)

@@ -234,36 +234,36 @@ def test_fake_kafka_producer_consumer_upsert_pipeline(spark, tmp_path):
     from dataingestiontohana_spark.sources.kafkafake import (
         FakeKafkaBroker,
         fake_kafka_source,
-        write_stream_to_fake_kafka,
+    )
+    from dataingestiontohana_spark.streaming.graph_pipeline import (
+        SENSOR_SQL_COLUMNS,
+        PipelineGraph,
     )
     from dataingestiontohana_spark.streaming.kafka import parse_sensor_kafka
-    from dataingestiontohana_spark.streaming.pipeline import (
-        SENSOR_SQL_COLUMNS,
-    )
 
     broker_dir = str(tmp_path / "broker")
     FakeKafkaBroker(broker_dir).create_topic("sensor", partitions=2)
 
-    # R3: producer stream (file source of CSV lines -> keyed records)
+    # R3: producer graph (file source of CSV lines -> keyed records)
     src_dir = tmp_path / "src"
     src_dir.mkdir()
     lines = sensor_csv_lines(spark, 60).orderBy("counter").collect()
     (src_dir / "batch.txt").write_text(
         "\n".join(r["value"] for r in lines) + "\n"
     )
-    produced = (
-        spark.readStream.format("text")
-        .load(str(src_dir))
-        .select(
-            F.split("value", ",").getItem(0).alias("key"),
-            F.col("value"),
-        )
-    )
-    pq = write_stream_to_fake_kafka(
-        produced, broker_dir, "sensor", str(tmp_path / "ck_prod")
-    )
-    pq.processAllAvailable()
-    pq.stop()
+    prod = PipelineGraph()
+    prod.node("gen", "data_generator", source_dir=str(src_dir))
+    prod.node("keyed", "process", fn=lambda df: df.select(
+        F.split("value", ",").getItem(0).alias("key"),
+        F.col("value"),
+    ))
+    prod.node("producer", "kafka_producer", path=broker_dir, topic="sensor",
+              key_col="key")
+    prod.connect("gen", "keyed")
+    prod.connect("keyed", "producer")
+    assert prod.compile(
+        spark, str(tmp_path / "ck_prod")
+    ).run_to_completion() is None
 
     # R4 + R6: consume, parse, keyed-upsert into SQLite
     db = str(tmp_path / "sink.db")

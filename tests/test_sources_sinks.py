@@ -36,8 +36,10 @@ from dataingestiontohana_spark.sources.readers import (
     read_text,
     read_xml,
 )
-from dataingestiontohana_spark.streaming.multiplex import Wiretap, multiplex
-from dataingestiontohana_spark.streaming.pipeline import SENSOR_SQL_COLUMNS
+from dataingestiontohana_spark.streaming.graph_pipeline import (
+    SENSOR_SQL_COLUMNS,
+    PipelineGraph,
+)
 
 SENSOR_DDL_SPARK = (
     "counter int, deviceid int, temperature double, humidity double, "
@@ -125,29 +127,25 @@ def test_batch_relational_roundtrip(spark, tmp_path):
 def test_multiplex_fans_out_to_two_sinks(spark, tmp_path):
     src = str(tmp_path / "src")
     write_sensor_csv_files(spark, src, 60, files=3)
-    stream = (
-        spark.readStream.format("text").option("maxFilesPerTrigger", "1").load(src)
-    )
+    g = PipelineGraph()
+    g.node("gen", "data_generator", source_dir=src, max_files_per_trigger=1)
+    g.node("mux", "multiplexer")
+    g.connect("gen", "mux")
+    for branch in ("a", "b"):
+        g.node(branch, "wiretap")
+        g.node(f"{branch}_out", "terminal")
+        g.connect("mux", branch)
+        g.connect(branch, f"{branch}_out")
+    c = g.compile(spark, str(tmp_path / "ck"))
+    assert c.run_to_completion() is None
 
-    seen_a: list[int] = []
-    seen_b: list[int] = []
-    tap = Wiretap("t")
-    q = multiplex(
-        stream,
-        [
-            lambda df, e: seen_a.append(df.count()),
-            lambda df, e: seen_b.append(df.count()),
-        ],
-        str(tmp_path / "ck"),
-        wiretap=tap,
-    )
-    q.processAllAvailable()
-    q.stop()
+    seen_a = [e.n_rows for e in c.wiretaps["a"].entries]
+    seen_b = [e.n_rows for e in c.wiretaps["b"].entries]
     # both branches saw every message exactly once, batch-for-batch
     assert sum(seen_a) == sum(seen_b) == 60
     assert seen_a == seen_b
-    assert [e.n_rows for e in tap.entries] == seen_a
-    assert all(e.wall_clock > 0 for e in tap.entries)
+    assert all(e.wall_clock > 0 for e in c.wiretaps["a"].entries)
+    assert all(e.wall_clock > 0 for e in c.wiretaps["b"].entries)
 
 
 def test_compact_parquet_reduces_file_count(spark, tmp_path):

@@ -264,3 +264,70 @@ def test_progress_recorder_captures_batches(spark, tmp_path):
     rows = sum(p["numInputRows"] for p in rec.progress)
     assert rows == 100  # every generated row accounted for
     assert {p["batchId"] for p in rec.progress if p["numInputRows"]} >= {0, 1, 2, 3}
+
+
+def _impatient_sink(db_path: str) -> UpsertSink:
+    """A sink whose writer gives up waiting for a lock after 0.1 s."""
+    return UpsertSink(
+        table="sensor_sink",
+        key_cols=["counter"],
+        dialect=SQLiteDialect(),
+        connection_factory=functools.partial(
+            sqlite3.connect, db_path, timeout=0.1
+        ),
+        write_mode="driver",
+    )
+
+
+def _hold_read_lock(db_path: str) -> sqlite3.Connection:
+    """Open a read transaction: until it ends, no writer can commit."""
+    con = sqlite3.connect(db_path, isolation_level=None)
+    con.execute("BEGIN")
+    con.execute('SELECT COUNT(*) FROM "sensor_sink"').fetchone()
+    return con
+
+
+def test_upsert_sink_raises_when_commit_fails(spark, tmp_path):
+    from dataingestiontohana_spark.sources.generator import sensor_rows
+    from dataingestiontohana_spark.streaming.pipeline import SENSOR_SQL_COLUMNS
+
+    db = str(tmp_path / "sink.db")
+    sink = _impatient_sink(db)
+    sink.ensure_table(SENSOR_SQL_COLUMNS)
+    reader = _hold_read_lock(db)
+    try:
+        with pytest.raises(sqlite3.OperationalError, match="locked"):
+            sink.write(sensor_rows(spark, 20), upsert=True)
+    finally:
+        reader.close()
+    assert run_audit(tmp_path).n_rows == 0  # nothing landed
+
+
+def test_exactly_once_commit_failure_fails_the_query(spark, source_dir, tmp_path):
+    """A batch whose sink commit fails must fail the query, so its
+    offsets stay uncommitted and the restart re-delivers it; a swallowed
+    commit error would commit the offsets of rows that never landed."""
+    from dataingestiontohana_spark.streaming.pipeline import SENSOR_SQL_COLUMNS
+
+    db = str(tmp_path / "sink.db")
+
+    def pipeline() -> IngestionPipeline:
+        return IngestionPipeline(
+            spark=spark,
+            source_dir=source_dir,
+            checkpoint_dir=str(tmp_path / "checkpoint"),
+            sink=_impatient_sink(db),
+            mode=DeliveryMode.EXACTLY_ONCE,
+        )
+
+    _impatient_sink(db).ensure_table(SENSOR_SQL_COLUMNS)
+    reader = _hold_read_lock(db)
+    try:
+        assert pipeline().run_to_completion() is not None
+    finally:
+        reader.close()
+    assert run_audit(tmp_path).n_rows == 0
+
+    assert pipeline().run_to_completion() is None  # lock released
+    a = run_audit(tmp_path)
+    assert a.exactly_once and a.n_rows == N_ROWS  # rows = uniq = span
