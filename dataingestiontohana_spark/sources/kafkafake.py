@@ -25,8 +25,11 @@ wire-shaped substitute for exactly that layer:
   ``key binary, value binary, topic string, partition int, offset
   long, timestamp timestamp, timestampType int`` — byte-for-byte the
   connector's schema — with offsets ``{partition: next}``,
-  ``startingOffsets earliest|latest``, and exact
-  ``readBetweenOffsets`` replay (the checkpoint-recovery path).
+  ``startingOffsets earliest|latest``, a ``maxOffsetsPerTrigger`` cap,
+  and exact ``readBetweenOffsets`` replay (the checkpoint-recovery
+  path). Like the connector, the consumer's only identity is Spark's
+  checkpoint: the cap plans from the positions Spark's own calls hand
+  the reader, so nothing but the ``p-<k>.jsonl`` logs lives on disk.
 
 The real-broker integration test stays skip-guarded for environments
 that have the jar; downstream code cannot tell the two sources apart,
@@ -108,40 +111,15 @@ class FakeKafkaBroker:
         partition: int | None = None,
         timestamp_ms: int | None = None,
     ) -> tuple[int, int]:
-        """Append one record; returns (partition, offset). Keyed
-        records partition by deterministic key hash (same key -> same
-        partition, the Kafka ordering guarantee); unkeyed records
-        round-robin by current log sizes."""
-        parts = self.partitions(topic)
-        if not parts:
-            raise ValueError(f"unknown topic {topic!r}: create_topic first")
-        vb = value.encode() if isinstance(value, str) else bytes(value)
-        kb = (
-            key.encode()
-            if isinstance(key, str)
-            else (bytes(key) if key is not None else None)
-        )
-        if partition is None:
-            if kb is not None:
-                partition = parts[
-                    int.from_bytes(hashlib.md5(kb).digest()[:4], "big")
-                    % len(parts)
-                ]
-            else:
-                sizes = {k: self._log_size_bytes(topic, k) for k in parts}
-                partition = min(parts, key=lambda k: (sizes[k], k))
-        ts = timestamp_ms if timestamp_ms is not None else int(
-            time.time() * 1000
-        )
-        rec = {
-            "k": base64.b64encode(kb).decode() if kb is not None else None,
-            "v": base64.b64encode(vb).decode(),
-            "ts": ts,
-        }
-        f = os.path.join(self.path, topic, f"p-{partition}.jsonl")
-        offset = self._log_len(topic, partition)
-        _append_atomic(f, json.dumps(rec) + "\n")
-        return partition, offset
+        """Append one record; returns (partition, offset). Routed by
+        key hash, else to the smallest log (`_route`), unless
+        ``partition`` pins it."""
+        [(p, [line])] = self._route(
+            topic, [value], [key], timestamp_ms, partition
+        ).items()
+        offset = self._log_len(topic, p)
+        _append_atomic(os.path.join(self.path, topic, f"p-{p}.jsonl"), line)
+        return p, offset
 
     def produce_many(
         self,
@@ -150,48 +128,63 @@ class FakeKafkaBroker:
         keys: list[bytes | str | None] | None = None,
         timestamp_ms: int | None = None,
     ) -> int:
-        """Batch append: same per-record semantics as `produce` (keyed
-        records hash-partition, unkeyed balance across partitions), but
-        each partition file opens ONCE per call — the path the
-        executor-side producer takes (per-record open() turns a
-        micro-batch write into len(batch) fsyncs). Unkeyed balance uses
-        O(1) byte sizes, not line counts: `_log_len` re-reads the whole
-        log, which would make the Nth append cost O(sum of all prior
-        batches) over a long-running stream."""
+        """Batch append: each partition file takes ONE append per call —
+        the path the executor-side producer takes (per-record open()
+        turns a micro-batch write into len(batch) fsyncs)."""
+        buckets = self._route(
+            topic, values, keys or [None] * len(values), timestamp_ms
+        )
+        for p, lines in buckets.items():
+            f = os.path.join(self.path, topic, f"p-{p}.jsonl")
+            _append_atomic(f, "".join(lines))
+        return len(values)
+
+    def _route(
+        self,
+        topic: str,
+        values: list[bytes | str],
+        keys: list[bytes | str | None],
+        timestamp_ms: int | None,
+        partition: int | None = None,
+    ) -> dict[int, list[str]]:
+        """Encode records as log lines and bucket them by partition.
+        Keyed records partition by deterministic key hash (same key ->
+        same partition, the Kafka ordering guarantee); unkeyed records
+        go to the smallest log. Balance uses O(1) byte sizes, not line
+        counts: `_log_len` re-reads the whole log, which would make the
+        Nth append cost O(sum of all prior batches) over a long-running
+        stream."""
         parts = self.partitions(topic)
         if not parts:
             raise ValueError(f"unknown topic {topic!r}: create_topic first")
+        if partition is not None and partition not in parts:
+            # appending would create the log: a new partition that
+            # re-maps every key hash after it
+            raise ValueError(f"topic {topic!r} has no partition {partition}")
         sizes = {k: self._log_size_bytes(topic, k) for k in parts}
         ts = timestamp_ms if timestamp_ms is not None else int(
             time.time() * 1000
         )
         buckets: dict[int, list[str]] = {}
-        for i, value in enumerate(values):
-            key = keys[i] if keys else None
-            vb = value.encode() if isinstance(value, str) else bytes(value)
-            kb = (
-                key.encode()
-                if isinstance(key, str)
-                else (bytes(key) if key is not None else None)
-            )
-            rec = json.dumps({
+        for value, key in zip(values, keys, strict=True):
+            kb = key.encode() if isinstance(key, str) else key
+            vb = value.encode() if isinstance(value, str) else value
+            line = json.dumps({
                 "k": base64.b64encode(kb).decode() if kb is not None else None,
                 "v": base64.b64encode(vb).decode(),
                 "ts": ts,
-            })
-            if kb is not None:
+            }) + "\n"
+            p = partition
+            if p is None and kb is not None:
                 p = parts[
                     int.from_bytes(hashlib.md5(kb).digest()[:4], "big")
                     % len(parts)
                 ]
-            else:
+            elif p is None:
                 p = min(parts, key=lambda k: (sizes[k], k))
-            sizes[p] += len(rec) + 1
-            buckets.setdefault(p, []).append(rec)
-        for p, lines in buckets.items():
-            f = os.path.join(self.path, topic, f"p-{p}.jsonl")
-            _append_atomic(f, "\n".join(lines) + "\n")
-        return len(values)
+            sizes[p] += len(line)
+            buckets.setdefault(p, []).append(line)
+        return buckets
 
     def _log_size_bytes(self, topic: str, partition: int) -> int:
         """O(1) balance proxy for unkeyed spreading (stat, not read)."""
@@ -259,26 +252,30 @@ class FakeKafkaStreamReader(DataSourceStreamReader):
     the driver only computes the per-partition offset map
     ({str(partition): next_unread}); each micro-batch plans ONE input
     partition per topic partition with unread data, and the slice is
-    read EXECUTOR-SIDE by the task that owns it (the earlier
-    SimpleDataSourceStreamReader funneled every record through a
-    driver prefetch — fine for a sandbox, structurally wrong for the
-    scale story this stand-in exists to verify). Deterministic replay
+    read EXECUTOR-SIDE by the task that owns it. Deterministic replay
     via line numbers; `maxOffsetsPerTrigger` caps the total records a
-    micro-batch plans, like the connector."""
+    micro-batch plans, like the connector.
+
+    The cap plans from ``_pos``, the last planned batch end, held in
+    memory: Spark 4.1 sends every call of one query to one reader
+    instance. A fresh query calls latestOffset -> initialOffset ->
+    partitions(start, end), so the first latestOffset seeds ``_pos``
+    from startingOffsets. A restarted query first calls
+    partitions(last_end, last_end) and, after a crash, the replay's
+    partitions(start, end) (asking initialOffset for the start when
+    it replays batch 0) before any latestOffset, which puts ``_pos``
+    on the checkpoint's position — the same order PySpark's own
+    ``_SimpleStreamReaderWrapper`` relies on."""
 
     def __init__(self, options: dict):
         self.path = options["path"]
         self.topic = options["topic"]
         self.starting = options.get("startingoffsets", "earliest")
         self.max_per_trigger = int(options.get("maxoffsetspertrigger", 0))
-        # like Kafka's group.id: an OPTIONAL consumer identity that
-        # persists the cap base across process restarts (a throttle
-        # HINT only — correctness always comes from Spark's checkpoint)
-        self.group_id = options.get("groupid")
-        # last planned batch end, tracked so the trigger cap can be
-        # applied as ADMISSION CONTROL in latestOffset() — capping in
-        # partitions() instead would silently skip the records between
-        # the capped slice and the batch's committed end (data loss)
+        # the trigger cap is ADMISSION CONTROL in latestOffset() —
+        # capping in partitions() instead would silently skip the
+        # records between the capped slice and the batch's committed
+        # end (data loss)
         self._pos: dict | None = None
 
     def _broker(self) -> FakeKafkaBroker:
@@ -290,91 +287,26 @@ class FakeKafkaStreamReader(DataSourceStreamReader):
             return b.end_offsets(self.topic)
         return {str(k): 0 for k in b.partitions(self.topic)}
 
-    # -- groupid cap-base hint (survives a query restart) ------------
-    def _group_path(self) -> str:
-        return os.path.join(
-            self.path, self.topic, f"_group-{self.group_id}.json"
-        )
-
-    def _save_cap_base(self) -> None:
-        if not self.group_id or self._pos is None:
-            return
-        tmp = self._group_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(self._pos, fh)
-        os.replace(tmp, self._group_path())
-
-    def _seed_cap_base(self, end: dict) -> dict:
-        """Seed the trigger-cap base on the FIRST latestOffset() of an
-        instance. Spark's call order (measured in this runner) is
-        latestOffset -> initialOffset -> partitions, so the first
-        planning decision always happens before the source learns the
-        batch start — fresh query or restart alike. The seed must
-        never sit BEHIND the start Spark will use: a planned end below
-        the committed start would be committed as a BACKWARD offset
-        and the next batch would re-plan already-processed records
-        (duplicates). Safe sources, in order:
-
-        1. the groupid hint file: written at initialOffset and at
-           every partitions() call as that batch's planned end, so it
-           is >= the committed start (at most one in-flight batch
-           ahead on crash-replay) — restarts resume capped,
-           overshooting by <= one batch;
-        2. with a groupid but NO hint file yet: this is a fresh query
-           (nothing has ever planned under this identity), so
-           startingOffsets IS the true start — capping applies from
-           batch 0. (Deleting the hint file of a live checkpoint
-           re-introduces one backward-seed window; one identity, one
-           checkpoint, like a Kafka group.id.)
-        3. no groupid: the CURRENT end offsets for BOTH modes — the
-           log is append-only, so current end >= anything Spark ever
-           committed. Cost: the first batch of every process plans
-           the whole backlog uncapped; a one-time throttle bypass,
-           never loss, never duplicates. (Seeding `earliest` from 0 —
-           the pre-r8 behavior — was the unsafe variant: 0 + budget
-           can trail the committed start.)
-        """
-        if self.group_id:
-            try:
-                with open(self._group_path()) as fh:
-                    hint = json.load(fh)
-                # never beyond the log end (paranoia: recreated topic)
-                return {
-                    p: min(int(hint.get(p, 0)), int(end[p])) for p in end
-                }
-            except FileNotFoundError:
-                # genuinely fresh identity: nothing ever planned under
-                # this group, so startingOffsets IS the true start
-                return dict(self._start_offsets())
-            except (json.JSONDecodeError, ValueError, TypeError, OSError):
-                # a PRESENT but unreadable hint means this identity HAS
-                # planned batches before (e.g. a crash mid-write before
-                # the r8 atomic os.replace, or disk corruption) — with
-                # startingOffsets=earliest the fresh-query seed would
-                # sit BEHIND the committed start and re-plan processed
-                # records. Fall through to the no-groupid seed below:
-                # current end offsets — one uncapped batch, never
-                # duplicates.
-                pass
-        return {p: int(v) for p, v in end.items()}
-
     def initialOffset(self) -> dict:
-        off = self._start_offsets()
-        self._pos = dict(off)
-        self._save_cap_base()  # fresh query: cap from the true start
-        return off
+        # Spark asks once the reader holds a position: a fresh query's
+        # first latestOffset seeded it from startingOffsets, a restart
+        # replaying batch 0 handed back that batch's end. Under
+        # ``latest`` the log's end may since lie past it; a start past
+        # batch 0's end would make that batch a backward plan.
+        start = self._start_offsets()
+        pos = self._pos or {}
+        return {p: min(v, int(pos.get(p, v))) for p, v in start.items()}
 
     def latestOffset(self) -> dict:
         # driver-side planning only: stat the logs (O(#partitions), no
         # record materializes) and bound the batch by the trigger cap,
         # split across partitions PROPORTIONALLY to their unread
         # counts (the real connector's apportioning) — a sustained
-        # backlog on one partition must not starve the others, which
-        # the earlier drain-in-ascending-partition-order loop did.
+        # backlog on one partition must not starve the others.
+        if self._pos is None:  # fresh query: read the start before the end
+            self._pos = self._start_offsets()
         end = self._broker().end_offsets(self.topic)
         if self.max_per_trigger:
-            if self._pos is None:
-                self._pos = self._seed_cap_base(end)
             lo = {p: int(self._pos.get(p, 0)) for p in end}
             unread = {p: max(int(end[p]) - lo[p], 0) for p in end}
             total = sum(unread.values())
@@ -399,13 +331,21 @@ class FakeKafkaStreamReader(DataSourceStreamReader):
         return end
 
     def partitions(self, start: dict, end: dict) -> list[FakeKafkaSlice]:
-        # track the cap base as the max of the planned end and the TRUE
-        # batch start Spark restored from its checkpoint
+        behind = sorted(
+            (p for p in end if int(end[p]) < int(start.get(p, 0))), key=int
+        )
+        if behind:
+            # committing this end would move the offsets backward and
+            # re-deliver processed records on the next batch
+            raise ValueError(
+                f"kafkafake topic {self.topic!r}: batch plan ends before "
+                f"its start on partition(s) {behind} (start {start}, "
+                f"end {end})"
+            )
         self._pos = {
             p: max(int(end.get(p, 0)), int(start.get(p, 0)))
             for p in set(end) | set(start)
         }
-        self._save_cap_base()
         return [
             FakeKafkaSlice(int(p), int(start.get(p, 0)), int(end[p]))
             for p in sorted(end, key=int)
@@ -473,88 +413,30 @@ def register_fake_kafka(spark: SparkSession) -> None:
     spark.dataSource.register(FakeKafkaSource)
 
 
-def bootstrap_group_hint(
-    broker_path: str, topic: str, group_id: str, checkpoint_dir: str
-) -> bool:
-    """Seed a groupid's cap-base hint file from a Spark checkpoint's
-    offset log — the ADOPTION path: enabling a group id on a query
-    that already has committed offsets. Without this, the first
-    latestOffset under the new identity falls back to startingOffsets
-    (`_seed_cap_base` case 2) which, with `earliest`, sits BEHIND the
-    committed start and re-plans processed records (duplicates — see
-    the docstring's backward-offset analysis). The newest offsets/<n>
-    file holds that batch's planned END — exactly the hint invariant
-    (>= committed start, at most one in-flight batch ahead).
-
-    No-op (False) when the hint already exists or no usable offset log
-    is found; never raises on a malformed checkpoint."""
-    hint = os.path.join(broker_path, topic, f"_group-{group_id}.json")
-    if os.path.exists(hint):
-        return False
-    odir = os.path.join(checkpoint_dir, "offsets")
-    try:
-        batches = sorted(int(f) for f in os.listdir(odir) if f.isdigit())
-    except (FileNotFoundError, NotADirectoryError):
-        return False
-    for b in reversed(batches):
-        try:
-            with open(os.path.join(odir, str(b))) as fh:
-                lines = [ln for ln in fh.read().splitlines() if ln.strip()]
-            off = json.loads(lines[-1])  # line 3: the source offset dict
-            pos = {str(k): int(v) for k, v in off.items()}
-            int_keys = all(k.lstrip("-").isdigit() for k in pos)
-            if not (pos and int_keys):
-                continue
-        except (OSError, ValueError, AttributeError):
-            continue
-        os.makedirs(os.path.dirname(hint), exist_ok=True)
-        tmp = hint + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(pos, fh)
-        os.replace(tmp, hint)
-        return True
-    return False
-
-
 def fake_kafka_source(
     spark: SparkSession,
     path: str,
     topic: str,
     starting_offsets: str = "earliest",
     max_offsets_per_trigger: int = 0,
-    group_id: str | None = None,
 ) -> DataFrame:
     """readStream over a fake topic — drop-in for
     `streaming.kafka.kafka_source` (identical output schema), for
     environments without the connector jar. ``max_offsets_per_trigger``
-    mirrors the connector's micro-batch size cap (0 = drain all).
-
-    ``group_id`` (like Kafka's group.id) persists the trigger-cap base
-    across processes: Spark's Python streaming sources run initialOffset
-    and latestOffset on DIFFERENT runner instances, so without it the
-    cap base blind-seeds from the current end offsets and the first
-    batch of a query (fresh or restarted) plans the whole backlog
-    uncapped. With it, initialOffset/partitions persist the position
-    and every instance plans capped from the true start. One query per
-    group_id — sharing one across checkpoints mis-seeds the cap (same
-    contract as Kafka consumer groups). Enable the group id when the
-    query is FIRST created; adopting one on a query with existing
-    committed offsets needs `bootstrap_group_hint(broker, topic, gid,
-    checkpoint_dir)` first (the graph compiler does this
-    automatically), or the blind seed can sit behind the committed
-    start with startingOffsets=earliest and re-plan processed
-    records."""
+    mirrors the connector's micro-batch size cap (0 = drain all). The
+    checkpoint location is the consumer identity, as with the
+    connector: a fresh query is capped from startingOffsets, a
+    restarted one from its checkpoint's position (see
+    `FakeKafkaStreamReader`)."""
     register_fake_kafka(spark)
-    reader = (
+    return (
         spark.readStream.format("kafkafake")
         .option("path", path)
         .option("topic", topic)
         .option("startingOffsets", starting_offsets)
         .option("maxOffsetsPerTrigger", str(max_offsets_per_trigger))
+        .load()
     )
-    if group_id:
-        reader = reader.option("groupId", group_id)
-    return reader.load()
 
 
 def read_fake_topic(spark: SparkSession, path: str, topic: str) -> DataFrame:

@@ -2,12 +2,12 @@
 
 Parquet is the first-class path (columnar, predicate pushdown, column
 pruning). CSV/JSON take explicit schemas — schema inference is a full
-extra pass over the data and is disabled here by contract. JDBC has two
-paths: the real `spark.read.jdbc` (needs a driver jar on the
-classpath; supports predicate-partitioned parallel reads for scale)
-and a DBAPI bridge for embedded/driverless databases, which pulls
-through Arrow on the driver and is explicitly a small-table path
-(dimension loads, test stand-ins — never the 100 TB fact table).
+extra pass over the data and is disabled here by contract. Databases
+come in through a DBAPI bridge for embedded/driverless databases,
+which pulls through Arrow on the driver and is explicitly a
+small-table path (dimension loads, test stand-ins — never the 100 TB
+fact table); a distributed scan is Spark's own
+`spark.read.format("jdbc")` with a driver jar.
 """
 
 from __future__ import annotations
@@ -96,33 +96,6 @@ def read_binary_files(
     return reader.load(path)
 
 
-def read_jdbc(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    partition_column: str | None = None,
-    num_partitions: int = 8,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    **options: str,
-) -> DataFrame:
-    """Parallel JDBC read. With partition_column + bounds, Spark issues
-    num_partitions range-predicate queries concurrently — the only way
-    a JDBC scan keeps a cluster busy. Requires the vendor driver jar
-    (`spark.jars`); raises the underlying error if absent."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("numPartitions", str(num_partitions))
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-        )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
-
-
 def read_dbapi(
     spark: SparkSession,
     connection_factory: Callable[[], object],
@@ -133,7 +106,8 @@ def read_dbapi(
     without a JDBC jar (DuckDB/SQLite test stand-ins, small dims).
 
     The result set materializes on the driver — callers own keeping it
-    small; the JDBC path above is the distributed-scan alternative.
+    small; Spark's own ``jdbc`` format is the distributed-scan
+    alternative.
     """
     import pandas as pd
 

@@ -44,7 +44,7 @@ Node kinds and their reference counterparts:
 | kind             | ref | role      | config |
 |------------------|-----|-----------|--------|
 | `data_generator` | R1  | source    | EITHER `source_dir` (csv text files; `max_files_per_trigger`, default 1) OR `fn: SparkSession -> streaming DataFrame` (a live binding, e.g. the sensorgen Python Data Source) |
-| `kafka_consumer` | R4  | source    | `path`, `topic` (kafkafake transport; swap for the connector in a cluster) |
+| `kafka_consumer` | R4  | source    | `path`, `topic` (kafkafake transport; swap for the connector in a cluster), `max_offsets_per_trigger` (records per micro-batch, default 0 = drain all), `starting_offsets` (`earliest`, the default, or `latest`); the checkpoint is the consumer identity |
 | `multiplexer`    | R2  | fan-out   | — (the ONLY node allowed >1 downstream edge) |
 | `process`        | R5  | transform | EITHER `fn: DataFrame -> DataFrame` (a live binding) OR `sql: str` referencing the input as `{input}` (e.g. `SELECT * FROM {input} WHERE ...`). SQL transforms serialize INLINE in graph JSON — the reference's graph.json embeds its custom operators' scripts the same way — so a SQL-only graph needs no `$ref` bindings at load time. |
 | `wiretap`        | R9  | tap       | `wiretap: Wiretap` (defaults to a fresh one) |
@@ -61,7 +61,6 @@ tutorial itself applies), every leaf a sink, no cycles, no orphans.
 
 from __future__ import annotations
 
-import hashlib
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -76,7 +75,6 @@ from dataingestiontohana_spark.operators.upsert_sink import UpsertSink
 from dataingestiontohana_spark.sources.generator import SENSOR_FIELDS
 from dataingestiontohana_spark.sources.kafkafake import (
     FakeKafkaBroker,
-    bootstrap_group_hint,
     executor_producer,
     fake_kafka_source,
 )
@@ -311,41 +309,12 @@ class CompiledGraph:
                 )
                 .load(nd.config["source_dir"])
             )
-        # a capped consumer needs a stable consumer identity: the
-        # runner process serving latestOffset never sees initialOffset,
-        # so the cap base travels via the groupid hint file (see
-        # sources/kafkafake.py). Derived from (checkpoint dir, node
-        # name, topic): the checkpoint pins the query, the node+topic
-        # pin the source WITHIN it — the validator enforces one source
-        # per graph today, but a multi-source graph must never have
-        # two reader-runner instances clobbering one hint file's cap
-        # base, so the identity is per-node by construction.
-        group_id = nd.config.get("group_id") or (
-            "ck-"
-            + hashlib.md5(
-                "\x00".join(
-                    (self.checkpoint_dir, nd.name, nd.config["topic"])
-                ).encode()
-            ).hexdigest()[:12]
-            if nd.config.get("max_offsets_per_trigger")
-            else None
-        )
-        if group_id:
-            # adoption path: a pre-groupid checkpoint (e.g. written by
-            # an older build) restarting under this identity must seed
-            # the cap base from ITS committed offsets, not from
-            # startingOffsets — else earliest re-plans processed records
-            bootstrap_group_hint(
-                nd.config["path"], nd.config["topic"], group_id,
-                self.checkpoint_dir,
-            )
         return fake_kafka_source(
             self.spark,
             nd.config["path"],
             nd.config["topic"],
             nd.config.get("starting_offsets", "earliest"),
             nd.config.get("max_offsets_per_trigger", 0),
-            group_id,
         )
 
     def _compile_node(

@@ -81,17 +81,6 @@ def write_batch_to_kafka(df: DataFrame, brokers: str, topic: str) -> None:
     writer.save()
 
 
-def write_to_kafka(df: DataFrame, brokers: str, topic: str, checkpoint_dir: str):
-    """writeStream into a topic: payload column must be named `value`
-    (string/binary); returns the started query."""
-    writer = df.writeStream.format("kafka").option(
-        "checkpointLocation", checkpoint_dir
-    )
-    for k, v in kafka_sink_options(brokers, topic).items():
-        writer = writer.option(k, v)
-    return writer.start()
-
-
 def envelope_columns(kafka_df: DataFrame) -> DataFrame:
     """Project the reference's wiretap attribute set from the Kafka
     source schema, including the commit token (topic/partition/offset,

@@ -176,6 +176,19 @@ def test_fake_kafka_same_key_same_partition(tmp_path):
     assert len(parts) == 1
 
 
+def test_produce_to_missing_partition_raises(tmp_path):
+    """An explicit partition the topic lacks is refused: appending
+    would create its log, and every later key hash would map over
+    one more partition."""
+    from dataingestiontohana_spark.sources.kafkafake import FakeKafkaBroker
+
+    b = FakeKafkaBroker(str(tmp_path / "broker"))
+    b.create_topic("t", partitions=2)
+    with pytest.raises(ValueError, match="no partition 5"):
+        b.produce("t", "v", partition=5)
+    assert b.partitions("t") == [0, 1]
+
+
 def test_fake_kafka_checkpoint_replay_no_loss_no_dup(spark, tmp_path):
     """Offsets committed to the checkpoint: a restarted consumer reads
     ONLY records produced after the committed offsets — none lost,
@@ -414,229 +427,182 @@ def test_trigger_cap_drains_all_partitions_over_triggers(tmp_path):
     assert cur == {"0": 500, "1": 7, "2": 3}
 
 
-def test_groupid_hint_keeps_restart_capped(tmp_path):
-    """r7 ADVICE: without the hint, a restart with
-    startingoffsets=latest lazily seeds the cap base from the CURRENT
-    end — one uncapped flood batch. With groupid, the persisted cap
-    base bounds the first post-restart batch to <= budget."""
-    b = _mk_backlog(tmp_path, [0, 0])
-    r1 = _reader(tmp_path, maxOffsetsPerTrigger=10, groupid="g1")
-    committed = r1.initialOffset()  # latest == {0,0}
-    # backlog arrives, one capped batch runs and commits
-    for i in range(100):
-        b.produce("t", f"x{i}", partition=i % 2)
-    end1 = r1.latestOffset()
-    r1.partitions(committed, end1)
-    assert sum(end1.values()) - sum(committed.values()) == 10
-
-    # process dies; more backlog lands while down
-    for i in range(100):
-        b.produce("t", f"y{i}", partition=i % 2)
-    r2 = _reader(tmp_path, maxOffsetsPerTrigger=10, groupid="g1")
-    end2 = r2.latestOffset()  # no initialOffset: the restart path
-    # first post-restart batch spans (committed end1 -> end2): bounded
-    # by budget, not the 190-record backlog
-    assert sum(end2.values()) - sum(end1.values()) <= 10
-    # and never behind the committed start (no backward offsets)
-    assert all(end2[p] >= end1[p] for p in end1)
+def test_backward_batch_plan_raises(tmp_path):
+    """A plan ending before its start on any partition would commit a
+    backward offset and re-deliver processed records on the next
+    batch: partitions() refuses it instead of planning no slice."""
+    _mk_backlog(tmp_path, [30, 30])
+    r = _reader(tmp_path, maxOffsetsPerTrigger=10)
+    with pytest.raises(ValueError, match=r"ends before its start.*\['0'\]"):
+        r.partitions({"0": 20, "1": 5}, {"0": 10, "1": 15})
 
 
-def test_blind_restart_seed_never_behind_committed_start(tmp_path):
-    """Without groupid the blind restart seed is the CURRENT end for
-    BOTH startingoffsets modes: one uncapped catch-up batch, but never
-    an end below the committed start (a backward commit would re-plan
-    processed records — duplicates). Seeding `earliest` from 0 — the
-    pre-r8 behavior — violated this: 0 + budget < committed start."""
-    b = _mk_backlog(tmp_path, [300])
-    r1 = _reader(tmp_path, maxOffsetsPerTrigger=50, startingOffsets="earliest")
-    cur = r1.initialOffset()
-    for _ in range(4):  # query processes 200 records, then dies
-        end = r1.latestOffset()
-        r1.partitions(cur, end)
-        cur = end
-    assert cur == {"0": 200}
-
-    r2 = _reader(tmp_path, maxOffsetsPerTrigger=50, startingOffsets="earliest")
-    end2 = r2.latestOffset()
-    assert end2["0"] >= 200  # >= committed start: no duplicate re-plan
-    slices = r2.partitions(cur, end2)
-    assert all(s.lo >= 200 for s in slices)
-    # cap resumes on the very next trigger
-    b.produce("t", "tail", partition=0)
-    end3 = r2.latestOffset()
-    assert end3["0"] - end2["0"] <= 50
+def test_latest_start_read_once_per_reader(tmp_path):
+    """Fresh query order is latestOffset -> initialOffset: under
+    startingOffsets=latest an append between the two calls must not
+    move the start past batch 0's planned end."""
+    b = _mk_backlog(tmp_path, [5, 5])
+    r = _reader(tmp_path, maxOffsetsPerTrigger=10, startingOffsets="latest")
+    end = r.latestOffset()
+    for i in range(20):
+        b.produce("t", f"late{i}", partition=i % 2)
+    start = r.initialOffset()
+    assert start == end == {"0": 5, "1": 5}
+    assert r.partitions(start, end) == []
+    # the appended records form the next, capped batch
+    nxt = r.latestOffset()
+    assert sum(nxt.values()) - sum(end.values()) == 10
 
 
-def test_corrupt_group_hint_seeds_from_end_not_start(tmp_path):
-    """r8 ADVICE: a PRESENT but unparseable hint file means this
-    identity HAS planned batches before (crash mid-write, disk
-    corruption) — falling back to startingOffsets=earliest would seed
-    the cap base at 0, BEHIND the committed start, and re-plan
-    processed records. The corrupt-hint fallback is the no-groupid
-    seed instead: current end offsets — one uncapped batch, never
-    duplicates. (FileNotFoundError still means a genuinely fresh
-    identity and keeps the startingOffsets seed.)"""
-    import os
+# ---- trigger cap on real Spark: fresh query, restarts, two queries ----
 
-    b = _mk_backlog(tmp_path, [300])
-    r1 = _reader(
-        tmp_path, maxOffsetsPerTrigger=50,
-        startingOffsets="earliest", groupid="gc",
-    )
-    cur = r1.initialOffset()
-    for _ in range(4):  # 200 records processed + committed, then dies
-        end = r1.latestOffset()
-        r1.partitions(cur, end)
-        cur = end
-    assert cur == {"0": 200}
+def _produce_ints(broker: str, values) -> None:
+    """Keyed records whose values are the given ints, on topic "t"
+    (2 partitions)."""
+    from dataingestiontohana_spark.sources.kafkafake import FakeKafkaBroker
 
-    # corrupt the hint file (e.g. a pre-atomic-write torn write)
-    hint_path = os.path.join(str(tmp_path / "broker"), "t", "_group-gc.json")
-    with open(hint_path, "w") as fh:
-        fh.write('{"0": 2')  # truncated JSON
-    r2 = _reader(
-        tmp_path, maxOffsetsPerTrigger=50,
-        startingOffsets="earliest", groupid="gc",
-    )
-    end2 = r2.latestOffset()
-    # seeded from the CURRENT end (>= committed start 200), NOT from
-    # startingOffsets (0 + 50 = 50 < 200 would be a backward commit)
-    assert end2["0"] >= 200
-    slices = r2.partitions(cur, end2)
-    assert all(s.lo >= 200 for s in slices)
-    # the cap resumes on the next trigger and the hint file heals
-    b.produce("t", "tail", partition=0)
-    end3 = r2.latestOffset()
-    assert end3["0"] - end2["0"] <= 50
-
-
-def test_groupid_adoption_bootstraps_from_checkpoint(tmp_path, spark):
-    """Enabling a groupid on a query with EXISTING committed offsets
-    (e.g. a pre-groupid checkpoint restarting under a newer build)
-    must seed the cap base from the checkpoint's offset log, never
-    from startingOffsets — with `earliest`, the blind fallback would
-    plan an end behind the committed start and re-deliver processed
-    records. Pinned end-to-end: phase 1 consumes capped WITHOUT a
-    groupid, phase 2 restarts the same checkpoint WITH one; the sink
-    sees every record exactly once."""
-    import os
-
-    from dataingestiontohana_spark.sources.kafkafake import (
-        FakeKafkaBroker,
-        bootstrap_group_hint,
-        fake_kafka_source,
-    )
-
-    broker = str(tmp_path / "broker")
     b = FakeKafkaBroker(broker)
     b.create_topic("t", partitions=2)
-    for i in range(40):
-        b.produce("t", f"{i}", key=str(i))
+    vals = [str(v) for v in values]
+    b.produce_many("t", vals, keys=vals)
 
-    ck = str(tmp_path / "ck")
-    seen: list[int] = []
 
-    def sink(bdf, _e):
-        seen.extend(
-            int(bytes(r["value"]).decode()) for r in bdf.collect()
+def _consume(spark, broker, ck, cap, batches, crash_at=None,
+             starting="earliest"):
+    """Run a capped query over topic "t" until it has consumed every
+    available record, appending each batch's values to `batches`. The
+    run's `crash_at`-th batch raises instead of recording, failing the
+    query: a foreachBatch crash before its offsets commit."""
+    from dataingestiontohana_spark.sources.kafkafake import fake_kafka_source
+
+    ran: list[list[int]] = []
+
+    def sink(bdf, _epoch):
+        vals = sorted(
+            int(bytes(r["value"]).decode())
+            for r in bdf.select("value").collect()
         )
+        if len(ran) == crash_at:
+            raise RuntimeError(f"crash in batch {vals}")
+        ran.append(vals)
+        batches.append(vals)
 
-    # phase 1: no groupid (the pre-r8 shape); drain the 40-record
-    # prefix completely, committed start = 40
-    df1 = fake_kafka_source(spark, broker, "t", "earliest", 20)
-    q1 = (df1.writeStream.foreachBatch(sink)
-          .option("checkpointLocation", ck).start())
-    q1.processAllAvailable()
-    q1.stop()
-    q1.awaitTermination(30)
-    assert len(seen) == 40
-
-    # 60 more records land while the query is down — the blind
-    # earliest seed (0 + budget 20) would now sit far BEHIND the
-    # committed start of 40
-    for i in range(40, 100):
-        b.produce("t", f"{i}", key=str(i))
-
-    # phase 2: SAME checkpoint, NOW with a groupid (adoption) —
-    # bootstrap from the offset log, like the graph compiler does
-    assert bootstrap_group_hint(broker, "t", "g-adopt", ck)
-    df2 = fake_kafka_source(spark, broker, "t", "earliest", 20,
-                            group_id="g-adopt")
-    q2 = (df2.writeStream.foreachBatch(sink)
-          .option("checkpointLocation", ck).start())
-    q2.processAllAvailable()
-    q2.stop()
-    q2.awaitTermination(30)
-
-    # exactly-once at the source level: every record once, no replays
-    # (duplicates would appear WITHOUT the bootstrap: the blind
-    # earliest seed plans end=budget < committed start)
-    assert sorted(seen) == list(range(100)), (
-        f"n={len(seen)} uniq={len(set(seen))}"
+    q = (
+        fake_kafka_source(spark, broker, "t", starting, cap)
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", ck)
+        .start()
     )
-    # and the hint file reflects the consumed position
-    import json
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
-    hint = json.load(open(os.path.join(broker, "t", "_group-g-adopt.json")))
-    assert sum(hint.values()) == 100
+
+def _only_partition_logs(broker: str) -> None:
+    names = os.listdir(os.path.join(broker, "t"))
+    assert names and all(
+        n.startswith("p-") and n.endswith(".jsonl") for n in names
+    ), names
 
 
-def test_two_consumer_groups_isolated_on_one_topic(tmp_path, spark):
-    """Two independent queries (own checkpoints, own groupids) consume
-    the SAME topic: each keeps its own trigger cap, each lands every
-    record exactly once, and neither's hint file mis-seeds the other
-    (the one-query-per-group contract, exercised rather than assumed)."""
-    from dataingestiontohana_spark.sources.kafkafake import (
-        FakeKafkaBroker,
-        fake_kafka_source,
-    )
+def test_fresh_capped_query_caps_its_first_batch(spark, tmp_path):
+    """A fresh query over a 100-record backlog at cap 20 plans every
+    batch, the first included, at 20 records or fewer."""
+    broker = str(tmp_path / "broker")
+    _produce_ints(broker, range(100))
+    batches: list[list[int]] = []
+    _consume(spark, broker, str(tmp_path / "ck"), 20, batches)
+    assert max(map(len, batches)) <= 20, list(map(len, batches))
+    assert sorted(v for b in batches for v in b) == list(range(100))
+    _only_partition_logs(broker)
+
+
+def test_restarts_stay_capped_and_exactly_once(spark, tmp_path):
+    """A restart after a committed batch and a restart after a
+    foreachBatch crash are both capped from their first batch; the
+    crashed batch is replayed and every record lands exactly once. No
+    consumer state appears beside the topic."""
+    from pyspark.errors import StreamingQueryException
+
+    broker, ck = str(tmp_path / "broker"), str(tmp_path / "ck")
+    _produce_ints(broker, range(40))
+    batches: list[list[int]] = []
+    _consume(spark, broker, ck, 20, batches)
+    assert sorted(v for b in batches for v in b) == list(range(40))
+
+    _produce_ints(broker, range(40, 100))
+    committed = len(batches)
+    with pytest.raises(StreamingQueryException, match="crash in batch"):
+        _consume(spark, broker, ck, 20, batches, crash_at=1)
+    assert len(batches) == committed + 1  # restart after a commit
+
+    _consume(spark, broker, ck, 20, batches)  # restart after a crash
+    assert max(map(len, batches)) <= 20, list(map(len, batches))
+    assert sorted(v for b in batches for v in b) == list(range(100))
+    _only_partition_logs(broker)
+
+
+def test_two_capped_queries_on_one_topic(spark, tmp_path):
+    """Two queries with caps 20 and 30 consume one topic concurrently,
+    each from its own checkpoint: each delivers every record exactly
+    once within its cap, and a restart of one resumes capped from its
+    own position."""
+    from dataingestiontohana_spark.sources.kafkafake import fake_kafka_source
 
     broker = str(tmp_path / "broker")
-    b = FakeKafkaBroker(broker)
-    b.create_topic("t", partitions=2)
-    for i in range(80):
-        b.produce("t", f"{i}", key=str(i))
+    _produce_ints(broker, range(80))
+    batches = {20: [], 30: []}
 
-    seen = {"a": [], "b": []}
-
-    def sink(tag):
-        def f(bdf, _e):
-            seen[tag].extend(
-                int(bytes(r["value"]).decode()) for r in bdf.collect()
-            )
+    def sink(cap):
+        def f(bdf, _epoch):
+            batches[cap].append(sorted(
+                int(bytes(r["value"]).decode())
+                for r in bdf.select("value").collect()
+            ))
         return f
 
-    qa = (fake_kafka_source(spark, broker, "t", "earliest", 20, group_id="ga")
-          .writeStream.foreachBatch(sink("a"))
-          .option("checkpointLocation", str(tmp_path / "ck_a")).start())
-    qb = (fake_kafka_source(spark, broker, "t", "earliest", 30, group_id="gb")
-          .writeStream.foreachBatch(sink("b"))
-          .option("checkpointLocation", str(tmp_path / "ck_b")).start())
-    qa.processAllAvailable(); qb.processAllAvailable()
-    qa.stop(); qb.stop()
-    qa.awaitTermination(30); qb.awaitTermination(30)
+    queries = [
+        fake_kafka_source(spark, broker, "t", "earliest", cap)
+        .writeStream.foreachBatch(sink(cap))
+        .option("checkpointLocation", str(tmp_path / f"ck{cap}"))
+        .start()
+        for cap in batches
+    ]
+    for q in queries:
+        q.processAllAvailable()
+    for q in queries:
+        q.stop()
+    for cap, got in batches.items():
+        assert max(map(len, got)) <= cap, (cap, list(map(len, got)))
+        assert sorted(v for b in got for v in b) == list(range(80))
 
-    assert sorted(seen["a"]) == list(range(80))
-    assert sorted(seen["b"]) == list(range(80))
+    _produce_ints(broker, range(80, 160))
+    again: list[list[int]] = []
+    _consume(spark, broker, str(tmp_path / "ck20"), 20, again)
+    assert max(map(len, again)) <= 20, list(map(len, again))
+    assert sorted(v for b in again for v in b) == list(range(80, 160))
+    _only_partition_logs(broker)
 
-    # fresh backlog: each group resumes capped from ITS OWN position
-    for i in range(80, 160):
-        b.produce("t", f"{i}", key=str(i))
-    import json
-    import os
 
-    ha = json.load(open(os.path.join(broker, "t", "_group-ga.json")))
-    hb = json.load(open(os.path.join(broker, "t", "_group-gb.json")))
-    assert sum(ha.values()) == sum(hb.values()) == 80
+def test_latest_query_restarts_after_batch_zero_crash(spark, tmp_path):
+    """Replaying batch 0 after a crash, Spark asks initialOffset()
+    again. Under startingOffsets=latest the log's current end now lies
+    past batch 0's end; the start answered must not, or the replay is
+    a backward plan. The records produced while the query was down
+    are delivered, capped."""
+    from pyspark.errors import StreamingQueryException
 
-    seen2: list[int] = []
-    q2 = (fake_kafka_source(spark, broker, "t", "earliest", 20, group_id="ga")
-          .writeStream.foreachBatch(
-              lambda bdf, _e: seen2.extend(
-                  int(bytes(r["value"]).decode()) for r in bdf.collect()))
-          .option("checkpointLocation", str(tmp_path / "ck_a")).start())
-    q2.processAllAvailable(); q2.stop(); q2.awaitTermination(30)
-    assert sorted(seen2) == list(range(80, 160))  # no replays, no loss
+    broker, ck = str(tmp_path / "broker"), str(tmp_path / "ck")
+    _produce_ints(broker, range(30))
+    batches: list[list[int]] = []
+    with pytest.raises(StreamingQueryException, match="crash in batch"):
+        _consume(spark, broker, ck, 20, batches, crash_at=0,
+                 starting="latest")
+    _produce_ints(broker, range(30, 60))
+    _consume(spark, broker, ck, 20, batches, starting="latest")
+    assert max(map(len, batches)) <= 20, list(map(len, batches))
+    assert sorted(v for b in batches for v in b) == list(range(30, 60))
 
 
 def test_trigger_budget_apportioning_invariants_hypothesis(tmp_path):
@@ -660,7 +626,6 @@ def test_trigger_budget_apportioning_invariants_hypothesis(tmp_path):
     def check(unread, budget):
         r = FakeKafkaStreamReader.__new__(FakeKafkaStreamReader)
         r.max_per_trigger = budget
-        r.group_id = None
         r._pos = {str(k): 0 for k in range(len(unread))}
         end_offsets = {str(k): n for k, n in enumerate(unread)}
         # drive latestOffset's capping logic directly against a fake
