@@ -7,14 +7,18 @@ meant to be overridden (`spark.sql.shuffle.partitions`) at cluster scale
 to ~2-3x total executor cores.
 
 Where Spark's Python processes import pyspark from: Spark puts
-``$SPARK_HOME/python/lib/pyspark.zip`` (and the py4j zip) first on
-every Python worker's path — the daemon and its forked UDF/read/planner
-workers, and the streaming source runner started at every query start
-and restart. That zip holds no bytecode, so each fresh process compiled
-pyspark from source (0.8-1.2 s). `get_spark` adds the package's
+``$SPARK_HOME/python/lib/pyspark.zip``, the py4j zip and the
+spark-core jar on every Python worker's path — the daemon and its
+forked UDF/read/planner workers, and the streaming source runner
+started at every query start and restart. That zip holds no bytecode,
+so each fresh process compiled pyspark from source (0.8-1.2 s), and the
+``zipimporter`` each archive leaves in ``sys.path_importer_cache`` made
+every task's ``importlib.invalidate_caches()`` re-read the archives
+(about 90 ms, most of it the jar). `get_spark` adds the package's
 ``_pyworker`` directory to ``spark.executorEnv.PYTHONPATH``; its
-``sitecustomize`` moves the zips behind the installed pyspark the driver
-imports, which ships compiled bytecode — only when the versions match.
+``sitecustomize`` drops those archives and their cached importers when
+the installed pyspark the driver imports, which ships compiled
+bytecode, has the same version.
 """
 
 from __future__ import annotations
