@@ -5879,16 +5879,8 @@ _CORRUPT_ERRORS = (
 )
 
 
-def decode_media(
-    df: DataFrame,
-    passthrough: tuple[str, ...] = (),
-    quarantine_unsupported: bool = False,
-) -> DataFrame:
+def decode_media(df: DataFrame) -> DataFrame:
     """binary media -> typed metadata + pixel statistics.
-
-    ``passthrough`` names STRING columns of ``df`` carried verbatim
-    onto each output row (the decode is 1:1) — e.g. the source path,
-    so a quarantine row can identify its dead file without a join.
 
     ``mean_px``/``std_px`` are the human-facing floats; ``px_sum`` /
     ``px_sqsum`` are EXACT integer moments (sum of byte values, sum of
@@ -5902,34 +5894,22 @@ def decode_media(
     stream — lands a QUARANTINE row: metadata nulled, ``decode_error``
     carrying the exception, the batch never dying on one bad blob. An
     UNSUPPORTED container (MP4, MP3 — no codec stack here) raises
-    `NotImplementedError` by default: in batch, that is a declared
-    capability boundary, not a bad record. ``quarantine_unsupported``
-    routes it to the quarantine column instead — REQUIRED on streaming
-    input: a file-source checkpoint replays a failed micro-batch on
-    restart, so one stray ``.mp4``/``.tmp`` in a drop directory would
-    otherwise wedge the query permanently (the stream can never skip
-    past the poison file without operator intervention)."""
-    quarantined = (
-        (NotImplementedError, *_CORRUPT_ERRORS)
-        if quarantine_unsupported
-        else _CORRUPT_ERRORS
-    )
+    `NotImplementedError`: that is a declared capability boundary, not
+    a bad record."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
-            extras = [pdf[c] for c in passthrough]
-            for i, (mid, kind, content) in enumerate(
-                zip(pdf["media_id"], pdf["kind"], pdf["content"])
+            for mid, kind, content in zip(
+                pdf["media_id"], pdf["kind"], pdf["content"]
             ):
-                thru = tuple(col.iloc[i] for col in extras)
                 try:
                     w, h, nf, ch, px = _decode_payload(bytes(content))
-                except quarantined as ex:
+                except _CORRUPT_ERRORS as ex:
                     rows.append(
                         (mid, kind, None, None, None, None, len(content),
                          None, None, None, None,
-                         f"{type(ex).__name__}: {ex}"[:200]) + thru
+                         f"{type(ex).__name__}: {ex}"[:200])
                     )
                     continue
                 if px is not None:
@@ -5944,7 +5924,7 @@ def decode_media(
                     stats = (None, None, None, None)
                 rows.append(
                     (mid, kind, w, h, nf, ch, len(content))
-                    + stats + (None,) + thru
+                    + stats + (None,)
                 )
             yield pd.DataFrame(
                 rows,
@@ -5961,14 +5941,10 @@ def decode_media(
                     "px_sum",
                     "px_sqsum",
                     "decode_error",
-                    *passthrough,
                 ],
             )
 
-    schema = DECODED_SCHEMA + "".join(
-        f", {c} string" for c in passthrough
-    )
-    return df.mapInPandas(batches, schema=schema)
+    return df.mapInPandas(batches, schema=DECODED_SCHEMA)
 
 
 def sample_frames(df: DataFrame, every_k: int = 2) -> DataFrame:

@@ -1448,8 +1448,8 @@ def q119_debounce_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate-limit / double-click suppressor every event pipeline ships.
     This is the window-expressible (lag-to-previous-ROW) variant; the
     drop-relative-to-last-KEPT variant is sequentially dependent per
-    key and belongs to the stateful streaming surface
-    (streaming/stateful.py), not a batch plan.
+    key and belongs to a stateful streaming operator
+    (applyInPandasWithState), not a batch plan.
 
     Exactness: gaps are exact epoch-second integers; counts are int64;
     drop_pct is ONE exact-int division rounded for display.

@@ -7,7 +7,6 @@ Coverage map of the engine's Python extension points:
 - grouped-AGG pandas UDF -> q55 (UDAF: geometric mean)
 - grouped-MAP applyInPandas -> q56 (per-group z-score normalization)
 - mapInPandas (UDTF-ish) -> operators/multimodal.py
-- stateful applyInPandasWithState -> streaming/stateful.py
 
 Each is Arrow-batched; none is row-at-a-time Python.
 """

@@ -49,20 +49,3 @@ def parse_sensor_csv_quarantine(
     )
     return df.withColumn("_row", parsed).select("_row.*")
 
-
-def parse_json_quarantine(
-    df: DataFrame, schema_ddl: str, value_col: str = "value"
-) -> DataFrame:
-    """JSON twin of :func:`parse_sensor_csv_quarantine`: parse a JSON
-    message body into typed columns with malformed bodies landing
-    verbatim in ``_corrupt`` — the quarantine contract is identical
-    across envelope formats, so a pipeline can switch its wire format
-    without changing its dead-letter handling. `from_json` is a
-    built-in JVM expression: one codegen pass, no Python."""
-    body: Column = F.col(value_col).cast("string")
-    parsed = F.from_json(
-        body,
-        schema_ddl + ", _corrupt string",
-        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
-    )
-    return df.withColumn("_row", parsed).select("_row.*")

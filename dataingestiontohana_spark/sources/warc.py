@@ -597,7 +597,6 @@ def warc_records(
     df: DataFrame,
     id_col: str = "file_id",
     content_col: str = "content",
-    passthrough: tuple[str, ...] = (),
     rows_per_chunk: int = 256,
     bytes_per_chunk: int = 32 << 20,
 ) -> DataFrame:
@@ -611,10 +610,7 @@ def warc_records(
 
     Response records carry the parsed HTTP status and body; other
     record kinds (request/metadata/warcinfo) keep their type with a
-    NULL body. ``passthrough`` names STRING columns of ``df``
-    replicated onto every record row of that file (the streaming path
-    rides the file key and source path through the 1:N parse this
-    way — no join). The dead-letter discipline is two-level: a record
+    NULL body. The dead-letter discipline is two-level: a record
     whose HTTP payload is malformed quarantines THAT record
     (`parse_error` set, siblings unaffected); structural corruption
     of the FILE quarantines the remainder with one rec_idx=-1 row —
@@ -627,14 +623,13 @@ def warc_records(
     cols = [
         "file_id", "rec_idx", "warc_type", "target_uri",
         "http_status", "content_type", "n_payload_bytes",
-        "n_body_bytes", "body", "parse_error", *passthrough,
+        "n_body_bytes", "body", "parse_error",
     ]
 
     def batches(it):
         for pdf in it:
             rows: list[tuple] = []
             pending = 0  # body bytes buffered in `rows`
-            extras = [pdf[c] for c in passthrough]
 
             def flush():
                 nonlocal rows, pending
@@ -642,10 +637,7 @@ def warc_records(
                 rows, pending = [], 0
                 return out
 
-            for row_i, (fid, blob) in enumerate(
-                zip(pdf[id_col], pdf[content_col])
-            ):
-                thru = tuple(col.iloc[row_i] for col in extras)
+            for fid, blob in zip(pdf[id_col], pdf[content_col]):
                 records = iter_warc_records(bytes(blob))
                 j = 0
                 while True:
@@ -657,7 +649,7 @@ def warc_records(
                         rows.append(
                             (fid, -1, None, None, None, None, None,
                              None, None,
-                             f"{type(ex).__name__}: {ex}"[:200]) + thru
+                             f"{type(ex).__name__}: {ex}"[:200])
                         )
                         break
                     wtype = hdrs.get("warc-type", "")
@@ -665,7 +657,7 @@ def warc_records(
                     if wtype != "response":
                         rows.append(
                             (fid, j, wtype, uri, None, None,
-                             len(payload), None, None, None) + thru
+                             len(payload), None, None, None)
                         )
                     else:
                         try:
@@ -677,14 +669,12 @@ def warc_records(
                                 (fid, j, wtype, uri, None, None,
                                  len(payload), None, None,
                                  f"{type(ex).__name__}: {ex}"[:200])
-                                + thru
                             )
                         else:
                             rows.append(
                                 (fid, j, wtype, uri, status,
                                  h.get("content-type"),
                                  len(payload), len(body), body, None)
-                                + thru
                             )
                             pending += len(body)
                     j += 1
@@ -695,7 +685,4 @@ def warc_records(
             if rows:
                 yield flush()
 
-    schema = WARC_RECORD_SCHEMA + "".join(
-        f", {c} string" for c in passthrough
-    )
-    return df.mapInPandas(batches, schema=schema)
+    return df.mapInPandas(batches, schema=WARC_RECORD_SCHEMA)

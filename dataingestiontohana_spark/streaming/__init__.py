@@ -1,5 +1,6 @@
-"""Streaming: ingestion pipeline with delivery guarantees, fault
-injection, windowed aggregations, and the sink audit."""
+"""Streaming: the operator-graph runner (graph_pipeline) with its
+delivery guarantees, the fixed ingestion wiring (pipeline), fault
+injection, the Kafka builders and the sink audit."""
 
 from dataingestiontohana_spark.streaming.pipeline import (  # noqa: F401
     DeliveryMode,

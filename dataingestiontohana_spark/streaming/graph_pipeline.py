@@ -43,7 +43,7 @@ Node kinds and their reference counterparts:
 
 | kind             | ref | role      | config |
 |------------------|-----|-----------|--------|
-| `data_generator` | R1  | source    | EITHER `source_dir` (csv text files; `max_files_per_trigger`, default 1) OR `fn: SparkSession -> streaming DataFrame` (a live binding, e.g. the sensorgen Python Data Source) |
+| `data_generator` | R1  | source    | `source_dir` (csv text files), `max_files_per_trigger` (default 1) |
 | `kafka_consumer` | R4  | source    | `path`, `topic` (kafkafake transport; swap for the connector in a cluster), `max_offsets_per_trigger` (records per micro-batch, default 0 = drain all), `starting_offsets` (`earliest`, the default, or `latest`); the checkpoint is the consumer identity |
 | `multiplexer`    | R2  | fan-out   | — (the ONLY node allowed >1 downstream edge) |
 | `process`        | R5  | transform | EITHER `fn: DataFrame -> DataFrame` (a live binding) OR `sql: str` referencing the input as `{input}` (e.g. `SELECT * FROM {input} WHERE ...`). SQL transforms serialize INLINE in graph JSON — the reference's graph.json embeds its custom operators' scripts the same way — so a SQL-only graph needs no `$ref` bindings at load time. |
@@ -57,6 +57,10 @@ Validation enforces the reference editor's wiring rules mechanically:
 exactly one source, in-degree 1 everywhere else, out-degree <= 1
 except the multiplexer ("insert a 1:2 Multiplexer" is the fix the
 tutorial itself applies), every leaf a sink, no cycles, no orphans.
+It also checks each node's config against the table above (the keys
+without a default, and a hana_client `mode` that names a
+`DeliveryMode`), so a JSON spec missing one fails validation, before
+compile creates any sink table.
 """
 
 from __future__ import annotations
@@ -89,6 +93,17 @@ SOURCE_KINDS = {"data_generator", "kafka_consumer"}
 TRANSFORM_KINDS = {"process", "wiretap", "simulate_error", "multiplexer"}
 SINK_KINDS = {"kafka_producer", "hana_client", "terminal"}
 KINDS = SOURCE_KINDS | TRANSFORM_KINDS | SINK_KINDS
+
+# config keys a node cannot run without (see the module table); the
+# either/or rules (process fn|sql, kafka_producer path|brokers) and
+# hana_client's mode value are checked in validate()
+REQUIRED_CONFIG = {
+    "data_generator": ("source_dir",),
+    "kafka_consumer": ("path", "topic"),
+    "simulate_error": ("fault",),
+    "kafka_producer": ("topic",),
+    "hana_client": ("sink",),
+}
 
 
 class GraphValidationError(ValueError):
@@ -173,14 +188,27 @@ class PipelineGraph:
                 f"one source node, got {len(sources)}: {sorted(sources)}"
             )
         for name, nd in self.nodes.items():
-            if nd.kind == "data_generator" and (
-                ("fn" in nd.config) == ("source_dir" in nd.config)
+            for key in REQUIRED_CONFIG.get(nd.kind, ()):
+                if key not in nd.config:
+                    raise GraphValidationError(
+                        f"{nd.kind} node {name!r} needs config {key!r}"
+                    )
+            if nd.kind == "kafka_producer" and not (
+                nd.config.get("brokers") or "path" in nd.config
             ):
                 raise GraphValidationError(
-                    f"data_generator node {name!r} needs exactly one of "
-                    f"'source_dir' (csv text files) or 'fn' (a "
-                    f"SparkSession -> streaming DataFrame binding)"
+                    f"kafka_producer node {name!r} needs config 'path' "
+                    f"(kafkafake transport) or 'brokers' (real connector)"
                 )
+            if nd.kind == "hana_client":
+                try:
+                    _mode(nd)
+                except ValueError:
+                    raise GraphValidationError(
+                        f"hana_client node {name!r}: config 'mode' "
+                        f"{nd.config['mode']!r} is not one of "
+                        f"{[m.value for m in DeliveryMode]}"
+                    ) from None
             if nd.kind == "process":
                 has_fn = "fn" in nd.config
                 has_sql = "sql" in nd.config
@@ -298,8 +326,6 @@ class CompiledGraph:
 
     def _source_stream(self) -> DataFrame:
         nd = self._source
-        if nd.kind == "data_generator" and "fn" in nd.config:
-            return nd.config["fn"](self.spark)
         if nd.kind == "data_generator":
             return (
                 self.spark.readStream.format("text")

@@ -16,10 +16,9 @@ counterparts are trigger pacing (`trigger(processingTime=...)`) and
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from dataingestiontohana_spark.operators.upsert_sink import UpsertSink
@@ -44,29 +43,18 @@ class IngestionPipeline:
     mode: DeliveryMode = DeliveryMode.EXACTLY_ONCE
     max_files_per_trigger: int = 1
     fault: FaultInjector | None = None
-    # Optional replacement source producing ALREADY-TYPED sensor rows
-    # (e.g. the registered "sensorgen" Python Data Source via
-    # sources.pyds.sensor_source_stream). When set, source_dir is
-    # ignored and the CSV parse step is skipped — the delivery
-    # semantics (checkpoint replay + upsert idempotence) are source-
-    # agnostic, which is exactly what the sensorgen kill/restart test
-    # proves for the custom source's offset determinism.
-    typed_source: Callable[[SparkSession], DataFrame] | None = None
 
     def _compile(self) -> CompiledGraph:
         """Wire the graph and compile it, which creates the sink table
         (with a primary key only under EXACTLY_ONCE)."""
         g = PipelineGraph()
-        if self.typed_source is not None:
-            upstream = g.node("source", "data_generator", fn=self.typed_source)
-        else:
-            g.node("source", "data_generator", source_dir=self.source_dir,
-                   max_files_per_trigger=self.max_files_per_trigger)
-            upstream = g.node("parse", "process", fn=parse_sensor_csv)
-            g.connect("source", upstream)
+        g.node("source", "data_generator", source_dir=self.source_dir,
+               max_files_per_trigger=self.max_files_per_trigger)
+        g.node("parse", "process", fn=parse_sensor_csv)
         g.node("hana", "hana_client", sink=self.sink, fault=self.fault,
                mode=self.mode)
-        g.connect(upstream, "hana")
+        g.connect("source", "parse")
+        g.connect("parse", "hana")
         return g.compile(self.spark, self.checkpoint_dir)
 
     def start(self) -> StreamingQuery:

@@ -97,23 +97,90 @@ def test_rejects_dangling_transform_and_orphan():
         g2.validate()
 
 
-def test_data_generator_needs_source_dir_xor_fn():
-    for cfg in ({}, {"source_dir": "x", "fn": lambda spark: None}):
-        g = PipelineGraph()
-        g.node("gen", "data_generator", **cfg)
+@pytest.mark.parametrize(
+    "kind, cfg, key",
+    [
+        pytest.param("data_generator", {}, "'source_dir'",
+                     id="data_generator-source_dir"),
+        # `fn` is no data_generator config: the node reads files only
+        pytest.param("data_generator", {"fn": lambda spark: None},
+                     "'source_dir'", id="data_generator-fn_is_not_a_source"),
+        pytest.param("kafka_consumer", {"path": "b"}, "'topic'",
+                     id="kafka_consumer-topic"),
+        pytest.param("kafka_consumer", {"topic": "t"}, "'path'",
+                     id="kafka_consumer-path"),
+        pytest.param("simulate_error", {}, "'fault'",
+                     id="simulate_error-fault"),
+        pytest.param("kafka_producer", {"path": "b"}, "'topic'",
+                     id="kafka_producer-topic"),
+        pytest.param("kafka_producer", {"topic": "t"},
+                     "'path' (kafkafake transport) or 'brokers'",
+                     id="kafka_producer-path_or_brokers"),
+        pytest.param("kafka_producer", {"topic": "t", "brokers": ""},
+                     "'path' (kafkafake transport) or 'brokers'",
+                     id="kafka_producer-empty_brokers"),
+        pytest.param("hana_client", {}, "'sink'", id="hana_client-sink"),
+        pytest.param("hana_client", {"sink": object(), "mode": "exactly-once"},
+                     "'mode' 'exactly-once'", id="hana_client-misspelt_mode"),
+    ],
+)
+def test_validate_names_node_and_missing_config(kind, cfg, key):
+    """A node missing a config key it cannot run without fails
+    validation naming the node and the key, instead of a bare
+    KeyError/ValueError inside compile or start."""
+    g = PipelineGraph()
+    if kind in ("data_generator", "kafka_consumer"):
+        g.node("n", kind, **cfg)
         g.node("t", "terminal")
-        g.connect("gen", "t")
-        with pytest.raises(GraphValidationError, match="exactly one of"):
-            g.validate()
+        g.connect("n", "t")
+    else:
+        g.node("gen", "data_generator", source_dir="x")
+        g.node("n", kind, **cfg)
+        g.connect("gen", "n")
+        if kind == "simulate_error":
+            g.node("t", "terminal")
+            g.connect("n", "t")
+    with pytest.raises(GraphValidationError) as err:
+        g.validate()
+    assert f"{kind} node 'n'" in str(err.value)
+    assert key in str(err.value)
+
+
+def test_spec_missing_consumer_topic_fails_before_sink_table(tmp_path):
+    """The JSON path: a consumer spec without `topic` is refused by
+    compile's validation before the hana_client's table is created."""
+    db = str(tmp_path / "sink.db")
+    sink = UpsertSink(
+        table="sensor_sink",
+        key_cols=["counter"],
+        dialect=SQLiteDialect(),
+        connection_factory=functools.partial(sqlite3.connect, db),
+        write_mode="driver",
+    )
+    spec = {
+        "nodes": [
+            {"name": "consumer", "kind": "kafka_consumer",
+             "config": {"path": str(tmp_path / "broker")}},
+            {"name": "hana", "kind": "hana_client",
+             "config": {"sink": {"$ref": "hana.sink"}, "mode": "exactly_once"}},
+        ],
+        "edges": [["consumer", "hana"]],
+    }
+    g = graph_from_dict(spec, refs={"hana.sink": sink})
+    with pytest.raises(GraphValidationError, match="'consumer' needs config 'topic'"):
+        g.compile(None, str(tmp_path / "ck"))
+    con = sqlite3.connect(db)
+    tables = con.execute("SELECT name FROM sqlite_master").fetchall()
+    con.close()
+    assert tables == []
 
 
 def test_one_micro_batch_runner():
     """Sensor ingest has ONE foreachBatch runner, CompiledGraph: a
     hand-written second runner re-implements (and drifts from) the
-    graph's fan-out, fault hooks and delivery modes. media.py's
-    decode-to-list demo sink is a different concern."""
+    graph's fan-out, fault hooks and delivery modes."""
     root = Path(pkg.__file__).parent
-    allowed = {"graph_pipeline.py", "media.py"}
+    allowed = {"graph_pipeline.py"}
     found = []
     for path in sorted([*root.joinpath("streaming").rglob("*.py"),
                         *root.joinpath("sources").rglob("*.py")]):

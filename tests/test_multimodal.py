@@ -2912,3 +2912,27 @@ def test_apng_mutations_never_escape():
         assert probe(bytes(mutated)) in ("pixels", "metadata", "error")
     for cut in range(len(apng)):
         assert probe(apng[:cut]) in ("pixels", "metadata", "error")
+
+
+def test_batch_decode_media_still_raises_on_unsupported(spark):
+    """The batch default is unchanged: an unsupported container is a
+    declared capability boundary and raises loudly. (r12: 'ftyp'
+    leads are CLAIMED by the QuickTime walk now — a moov-less stub
+    is a quarantined structural error, not this boundary — so the
+    pin uses a container no parser claims.)"""
+    import pytest
+    from dataingestiontohana_spark.operators.multimodal import decode_media
+
+    df = spark.createDataFrame(
+        [(1, 0, bytearray(b"\xff\xfb\x90\x00 mp3-ish, undecodable"))],
+        "media_id long, kind int, content binary",
+    )
+    with pytest.raises(Exception, match="NotImplementedError|unsupported"):
+        decode_media(df).collect()
+    # the ftyp stub: quarantined (corrupt MOV), never a task death
+    df2 = spark.createDataFrame(
+        [(1, 0, bytearray(b"\x00\x00\x00\x18ftypmp42" + bytes(32)))],
+        "media_id long, kind int, content binary",
+    )
+    rows = decode_media(df2).collect()
+    assert len(rows) == 1 and rows[0]["decode_error"] is not None

@@ -187,60 +187,23 @@ def test_dead_letter_fork_in_stream(spark, tmp_path):
     assert dead_rows == [bad]
 
 
-def test_exactly_once_sensorgen_kill_restart(spark, tmp_path):
-    """The reference's central claim (README.md:132-155) proven on the
-    engine's OWN custom source: the sensorgen Python Data Source's
-    deterministic counter offsets + checkpoint replay + keyed upsert
-    give rows = uniq = span across a kill/restart. A wall-clock source
-    (rate) could not replay the in-flight range; sensorgen's
-    readBetweenOffsets re-reads exactly the skipped counters."""
-    from dataingestiontohana_spark.sources.pyds import sensor_source_stream
-
-    def typed_source(s):
-        return sensor_source_stream(s, rows_per_batch=10, limit=N_ROWS)
-
-    def pipeline(fault=None):
-        return IngestionPipeline(
-            spark=spark,
-            source_dir="",  # unused: typed_source replaces it
-            checkpoint_dir=str(tmp_path / "checkpoint"),
-            sink=make_sink(str(tmp_path / "sink.db")),
-            mode=DeliveryMode.EXACTLY_ONCE,
-            fault=fault,
-            typed_source=typed_source,
-        )
-
-    fault = FaultInjector(
-        str(tmp_path / "flag"), FaultInjector.AFTER_WRITE, at_batch=2
-    )
-    fault.arm()
-    assert pipeline(fault).run_to_completion() is not None  # killed
-    mid = run_audit(tmp_path)
-    assert 0 < mid.n_rows < N_ROWS  # crashed mid-stream
-
-    assert pipeline().run_to_completion() is None  # checkpoint restart
-    a = run_audit(tmp_path)
-    assert a.exactly_once and a.n_rows == N_ROWS  # rows = uniq = span
-
-
 def test_progress_recorder_captures_batches(spark, tmp_path):
     """The listener-based wiretap: per-batch input rows recorded for
     the whole run, start/termination observed — registered DIRECTLY
     (ProgressRecorder is a real StreamingQueryListener subclass; the
     first cut duck-typed and crashed in addListener)."""
-    from dataingestiontohana_spark.sources.pyds import register_sensor_source
     from dataingestiontohana_spark.streaming.audit import ProgressRecorder
 
-    register_sensor_source(spark)
+    src = str(tmp_path / "src")
+    write_sensor_csv_files(spark, src, 100, files=4)  # 25 lines a file
     rec = ProgressRecorder()
     bridge = rec
     spark.streams.addListener(bridge)
     try:
         q = (
-            spark.readStream.format("sensorgen")
-            .option("rows_per_batch", "25")
-            .option("limit", "100")
-            .load()
+            spark.readStream.format("text")
+            .option("maxFilesPerTrigger", "1")
+            .load(src)
             .writeStream.format("noop")
             .option("checkpointLocation", str(tmp_path / "ck"))
             .start()

@@ -109,49 +109,6 @@ def test_binaryfile_drop_directory_end_to_end(spark, tmp_path):
     assert [r["t"] for r in out] == ["alpha beta", "alpha beta"]
 
 
-def test_streaming_warc_drop_dir_restart_safe(spark, tmp_path):
-    """The streaming leg: .warc.gz files dropped into a directory flow
-    through warc_records incrementally; a structurally broken archive
-    quarantines (one rec_idx=-1 row) WITHOUT wedging the checkpoint,
-    and a restart emits only newly dropped files with stable
-    (file_key, rec_idx) identity."""
-    from dataingestiontohana_spark.streaming.media import warc_file_stream
-
-    drop = tmp_path / "crawl"
-    drop.mkdir()
-    good = _rec("response", HTTP_OK, "http://s.test/1")
-    (drop / "a.warc.gz").write_bytes(gzip.compress(good))
-    (drop / "broken.warc").write_bytes(good[:15])
-
-    def run(rows):
-        q = (
-            warc_file_stream(spark, str(drop))
-            .writeStream.foreachBatch(lambda b, _e: rows.extend(b.collect()))
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination(30)
-
-    rows: list = []
-    run(rows)
-    by_file = {r["src_path"].rsplit("/", 1)[-1]: r for r in rows}
-    assert by_file["a.warc.gz"]["http_status"] == 200
-    assert by_file["broken.warc"]["rec_idx"] == -1
-    assert by_file["broken.warc"]["parse_error"]
-    import hashlib as _hl
-    for r in rows:
-        assert r["file_key"] == _hl.md5(r["src_path"].encode()).hexdigest()
-
-    # restart: only the new archive emits; prior identities unchanged
-    (drop / "b.warc").write_bytes(good + good)
-    rows2: list = []
-    run(rows2)
-    assert {r["src_path"].rsplit("/", 1)[-1] for r in rows2} == {"b.warc"}
-    assert sorted(r["rec_idx"] for r in rows2) == [0, 1]
-
-
 def test_streaming_parse_is_memory_bounded():
     """r9 verdict item 3: records must be yielded AS the gzip stream
     inflates — peak memory one record, never the whole inflated
@@ -399,42 +356,6 @@ def test_charset_aware_decode_is_mojibake_free(spark):
         F.col("body").isNull()
     )
     assert all(r["text"] is None for r in null_rows.collect())
-
-
-def test_streaming_charset_decode_composes(spark, tmp_path):
-    """r11: `decode_crawl_text` (the charset-aware struct UDF) must
-    compose onto the STREAMING warc path too — a gbk page dropped
-    into the crawl directory arrives decoded mojibake-free with its
-    resolved charset, through a checkpointed micro-batch."""
-    from pyspark.sql import functions as F
-
-    from dataingestiontohana_spark.sources.warc import decode_crawl_text
-    from dataingestiontohana_spark.streaming.media import warc_file_stream
-
-    drop = tmp_path / "crawl"
-    drop.mkdir()
-    body = "<p>中文网页</p>".encode("gbk")
-    payload = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html; "
-               b"charset=gbk\r\n\r\n" + body)
-    (drop / "a.warc").write_bytes(
-        _rec("response", payload, "http://s.test/zh"))
-
-    rows: list = []
-    q = (
-        decode_crawl_text(warc_file_stream(spark, str(drop)),
-                          charset_col="charset")
-        .where(F.col("http_status") == 200)
-        .writeStream.foreachBatch(lambda b, _e: rows.extend(b.collect()))
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(30)
-    assert len(rows) == 1
-    assert rows[0]["charset"] == "gbk"
-    assert rows[0]["text"] == "<p>中文网页</p>"
-    assert "�" not in rows[0]["text"]
 
 
 def test_content_sniffing_charset_fallback():
