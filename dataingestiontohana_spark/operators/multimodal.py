@@ -5091,9 +5091,7 @@ def _parse_avi_audio(b: bytes) -> tuple[int, np.ndarray | None, str]:
     return _decode_wave_payload(fmt_body, b"".join(parts))
 
 
-def avi_audio_samples(
-    df: DataFrame, passthrough: tuple[str, ...] = ()
-) -> DataFrame:
+def avi_audio_samples(df: DataFrame) -> DataFrame:
     """Container audio demux + decode (r12) -> one row per clip that
     carries an audio stream: (media_id, codec, n_samples, px_sum,
     px_sqsum, decode_error) with the exact integer sample moments
@@ -5116,36 +5114,31 @@ def avi_audio_samples(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
-            extras = [pdf[c] for c in passthrough]
-            for i, (mid, content) in enumerate(
-                zip(pdf["media_id"], pdf["content"])
-            ):
-                thru = tuple(col.iloc[i] for col in extras)
+            for mid, content in zip(pdf["media_id"], pdf["content"]):
                 try:
                     n, px, codec = demux(bytes(content))
                 except _CORRUPT_ERRORS as ex:
                     rows.append(
                         (mid, None, None, None, None,
-                         f"{type(ex).__name__}: {ex}"[:200]) + thru
+                         f"{type(ex).__name__}: {ex}"[:200])
                     )
                     continue
                 if codec == "none" and px is None and n == 0:
                     continue  # no audio stream: no row
                 if px is None:
-                    rows.append((mid, codec, n, None, None, None) + thru)
+                    rows.append((mid, codec, n, None, None, None))
                     continue
                 s, sq = _exact_moments(px)
-                rows.append((mid, codec, n, s, sq, None) + thru)
+                rows.append((mid, codec, n, s, sq, None))
             yield pd.DataFrame(
                 rows,
                 columns=["media_id", "codec", "n_samples", "px_sum",
-                         "px_sqsum", "decode_error", *passthrough],
+                         "px_sqsum", "decode_error"],
             )
 
     schema = (
         "media_id long, codec string, n_samples int, px_sum bigint, "
         "px_sqsum bigint, decode_error string"
-        + "".join(f", {c} string" for c in passthrough)
     )
     return df.mapInPandas(batches, schema=schema)
 

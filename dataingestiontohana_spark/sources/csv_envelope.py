@@ -24,28 +24,3 @@ def parse_sensor_csv(df: DataFrame, value_col: str = "value") -> DataFrame:
     body: Column = F.col(value_col).cast("string")
     parsed = F.from_csv(body, F.lit(SENSOR_DDL))
     return df.withColumn("_row", parsed).select("_row.*")
-
-
-def parse_sensor_csv_quarantine(
-    df: DataFrame, value_col: str = "value"
-) -> DataFrame:
-    """Parse with a dead-letter column: malformed bodies land verbatim
-    in ``_corrupt`` (null for clean rows) instead of silently nulling
-    fields. Callers fork the stream with two filters on one parse:
-
-        parsed = parse_sensor_csv_quarantine(stream)
-        good = parsed.where("_corrupt IS NULL").drop("_corrupt")
-        dead = parsed.where("_corrupt IS NOT NULL").select("_corrupt")
-
-    Both branches stay whole-stage codegen; the quarantine table keeps
-    the original bytes so failed messages are replayable after a fix —
-    the production upgrade of the reference's fail-at-DB behavior.
-    """
-    body: Column = F.col(value_col).cast("string")
-    parsed = F.from_csv(
-        body,
-        F.lit(SENSOR_DDL + ", _corrupt string"),
-        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
-    )
-    return df.withColumn("_row", parsed).select("_row.*")
-

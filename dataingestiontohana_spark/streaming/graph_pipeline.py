@@ -57,10 +57,10 @@ Validation enforces the reference editor's wiring rules mechanically:
 exactly one source, in-degree 1 everywhere else, out-degree <= 1
 except the multiplexer ("insert a 1:2 Multiplexer" is the fix the
 tutorial itself applies), every leaf a sink, no cycles, no orphans.
-It also checks each node's config against the table above (the keys
-without a default, and a hana_client `mode` that names a
-`DeliveryMode`), so a JSON spec missing one fails validation, before
-compile creates any sink table.
+It also checks each node's config against the table above (no key
+the kind does not read, the keys without a default, and a hana_client
+`mode` that names a `DeliveryMode`), so a JSON spec with a misspelt or
+missing key fails validation, before compile creates any sink table.
 """
 
 from __future__ import annotations
@@ -103,6 +103,21 @@ REQUIRED_CONFIG = {
     "simulate_error": ("fault",),
     "kafka_producer": ("topic",),
     "hana_client": ("sink",),
+}
+# every config key each kind reads (see the module table); validate()
+# rejects any other, so a misspelt optional key cannot fall back to its
+# default unnoticed
+KNOWN_CONFIG = {
+    "data_generator": {"source_dir", "max_files_per_trigger"},
+    "kafka_consumer": {"path", "topic", "max_offsets_per_trigger",
+                       "starting_offsets"},
+    "multiplexer": set(),
+    "process": {"fn", "sql"},
+    "wiretap": {"wiretap"},
+    "simulate_error": {"fault"},
+    "kafka_producer": {"topic", "brokers", "path", "key_col", "value_col"},
+    "hana_client": {"sink", "mode", "fault", "columns"},
+    "terminal": {"limit"},
 }
 
 
@@ -193,6 +208,13 @@ class PipelineGraph:
                     raise GraphValidationError(
                         f"{nd.kind} node {name!r} needs config {key!r}"
                     )
+            unknown = sorted(set(nd.config) - KNOWN_CONFIG[nd.kind])
+            if unknown:
+                raise GraphValidationError(
+                    f"{nd.kind} node {name!r} has unknown config "
+                    f"{unknown[0]!r}; it reads "
+                    f"{sorted(KNOWN_CONFIG[nd.kind]) or 'none'}"
+                )
             if nd.kind == "kafka_producer" and not (
                 nd.config.get("brokers") or "path" in nd.config
             ):

@@ -146,6 +146,41 @@ def test_validate_names_node_and_missing_config(kind, cfg, key):
     assert key in str(err.value)
 
 
+
+@pytest.mark.parametrize("kind, cfg, key", [
+    ("data_generator", {"source_dir": "x", "max_file_per_trigger": 5},
+     "max_file_per_trigger"),
+    ("kafka_consumer", {"path": "b", "topic": "t", "startingOffsets": "latest"},
+     "startingOffsets"),
+    ("terminal", {"limt": 5}, "limt"),
+])
+def test_validate_rejects_unknown_config_key(kind, cfg, key):
+    """A misspelt optional key fails validation naming the node and the
+    key, instead of validating and silently running on the default."""
+    g = PipelineGraph()
+    if kind == "terminal":
+        g.node("gen", "data_generator", source_dir="x")
+        g.node("n", kind, **cfg)
+        g.connect("gen", "n")
+    else:
+        g.node("n", kind, **cfg)
+        g.node("t", "terminal")
+        g.connect("n", "t")
+    with pytest.raises(GraphValidationError) as err:
+        g.validate()
+    assert f"{kind} node 'n'" in str(err.value)
+    assert repr(key) in str(err.value)
+
+
+def test_example_specs_validate():
+    """The JSON specs `tools/run_graph.py` runs use only known keys."""
+    specs = sorted(Path(__file__).parent.parent.glob("examples/*graph*.json"))
+    assert specs
+    for path in specs:
+        graph_from_dict(json.loads(path.read_text()), refs={
+            "typed.fn": lambda df: df, "hana.sink": object(),
+        }).validate()
+
 def test_spec_missing_consumer_topic_fails_before_sink_table(tmp_path):
     """The JSON path: a consumer spec without `topic` is refused by
     compile's validation before the hana_client's table is created."""

@@ -23,22 +23,3 @@ def test_generator_is_deterministic(spark):
 def test_csv_roundtrip_lossless(spark):
     row = q40_sensor_csv_roundtrip(spark, SF).head()
     assert (row["total"], row["matched"], row["uniq"], row["span"]) == (N, N, N, N)
-
-
-def test_csv_quarantine_splits_good_and_malformed(spark):
-    from dataingestiontohana_spark.sources.csv_envelope import (
-        parse_sensor_csv_quarantine,
-    )
-
-    good = "7,3,21.5,40.0,400.0,0.01,0.02,0.03,1,150.0,35.5"
-    bad_type = "NOTANUMBER,3,21.5,40.0,400.0,0.01,0.02,0.03,1,150.0,35.5"
-    df = spark.createDataFrame(
-        [(good,), (bad_type,)], "value string"
-    )
-    parsed = parse_sensor_csv_quarantine(df)
-    ok = parsed.where("_corrupt IS NULL").collect()
-    dead = parsed.where("_corrupt IS NOT NULL").collect()
-    assert len(ok) == 1 and ok[0]["counter"] == 7
-    assert ok[0]["temperature"] == 21.5
-    # the dead letter keeps the ORIGINAL message bytes for replay
-    assert len(dead) == 1 and dead[0]["_corrupt"] == bad_type

@@ -141,52 +141,6 @@ def test_fault_injector_fires_once(tmp_path):
     f.check(FaultInjector.BEFORE_WRITE)  # disarmed: passes
 
 
-def test_dead_letter_fork_in_stream(spark, tmp_path):
-    """Quarantine inside a live pipeline: one foreachBatch forks each
-    micro-batch into a good sink and a dead-letter sink off ONE parse
-    (no second read of the source); the dead letters keep the original
-    bytes for replay."""
-    import os
-
-    from dataingestiontohana_spark.sources.csv_envelope import (
-        parse_sensor_csv_quarantine,
-    )
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    good = "7,3,21.5,40.0,400.0,0.01,0.02,0.03,1,150.0,35.5"
-    bad = "corrupt-not-a-row"
-    with open(os.path.join(src, "b0.txt"), "w") as f:
-        f.write(good + "\n" + bad + "\n")
-
-    ok_rows: list[tuple] = []
-    dead_rows: list[str] = []
-
-    def fork(batch_df, epoch_id):
-        parsed = parse_sensor_csv_quarantine(batch_df).persist()
-        ok_rows.extend(
-            (r["counter"], r["temperature"])
-            for r in parsed.where("_corrupt IS NULL").collect()
-        )
-        dead_rows.extend(
-            r["_corrupt"]
-            for r in parsed.where("_corrupt IS NOT NULL").collect()
-        )
-        parsed.unpersist()
-
-    q = (
-        spark.readStream.format("text")
-        .load(src)
-        .writeStream.foreachBatch(fork)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    assert ok_rows == [(7, 21.5)]
-    assert dead_rows == [bad]
-
-
 def test_progress_recorder_captures_batches(spark, tmp_path):
     """The listener-based wiretap: per-batch input rows recorded for
     the whole run, start/termination observed — registered DIRECTLY
