@@ -41,10 +41,27 @@ from dataingestiontohana_spark.operators.upsert_sink import (
     UpsertSink,
 )
 from dataingestiontohana_spark.sources.generator import write_sensor_csv_files
+from dataingestiontohana_spark.streaming.audit import audit_sink
 from dataingestiontohana_spark.streaming.pipeline import (
     DeliveryMode,
     IngestionPipeline,
 )
+
+
+def _audit(db: str, n_rows: int, what: str) -> dict:
+    """The exactly-once audit of a run's SQLite sink table; raises
+    unless rows = uniq = span = n_rows."""
+    con = sqlite3.connect(db)
+    try:
+        a = audit_sink(con, "sensor_sink")
+    finally:
+        con.close()
+    if not (a.exactly_once and a.n_rows == n_rows):
+        raise RuntimeError(
+            f"{what} audit failed: rows={a.n_rows} uniq={a.uniq} "
+            f"span={a.span} expected={n_rows}"
+        )
+    return {"rows": a.n_rows, "uniq": a.uniq, "span": a.span}
 
 
 def _one_run(spark, source_dir: str, work: str, tag: str, n_rows: int) -> dict:
@@ -72,22 +89,10 @@ def _one_run(spark, source_dir: str, work: str, tag: str, n_rows: int) -> dict:
     elapsed = time.perf_counter() - t0
     if err is not None:
         raise RuntimeError(f"streaming bench run failed: {err}")
-    con = sqlite3.connect(db)
-    rows, uniq, lo, hi = con.execute(
-        'SELECT COUNT(*), COUNT(DISTINCT "counter"), '
-        'MIN("counter"), MAX("counter") FROM "sensor_sink"'
-    ).fetchone()
-    con.close()
-    span = hi - lo + 1 if rows else 0
-    if not (rows == uniq == span == n_rows):
-        raise RuntimeError(
-            f"exactly-once audit failed: rows={rows} uniq={uniq} "
-            f"span={span} expected={n_rows}"
-        )
     return {
         "sec": round(elapsed, 3),
         "rows_per_sec": round(n_rows / elapsed, 1),
-        "audit": {"rows": rows, "uniq": uniq, "span": span},
+        "audit": _audit(db, n_rows, "exactly-once"),
     }
 
 
@@ -163,22 +168,10 @@ def _graph_run(spark, work: str, n_rows: int, n_files: int) -> dict:
     elapsed = time.perf_counter() - t0
     if err is not None:
         raise RuntimeError(f"graph bench failed: {err}")
-    con = sqlite3.connect(db)
-    rows, uniq, lo, hi = con.execute(
-        'SELECT COUNT(*), COUNT(DISTINCT "counter"), '
-        'MIN("counter"), MAX("counter") FROM "sensor_sink"'
-    ).fetchone()
-    con.close()
-    span = hi - lo + 1 if rows else 0
-    if not (rows == uniq == span == n_rows):
-        raise RuntimeError(
-            f"graph exactly-once audit failed: rows={rows} uniq={uniq} "
-            f"span={span} expected={n_rows}"
-        )
     return {
         "sec": round(elapsed, 3),
         "rows_per_sec": round(n_rows / elapsed, 1),
-        "audit": {"rows": rows, "uniq": uniq, "span": span},
+        "audit": _audit(db, n_rows, "graph exactly-once"),
     }
 
 

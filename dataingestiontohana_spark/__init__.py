@@ -16,4 +16,4 @@ delivery-mode harness, minhash/simhash helpers).
 __version__ = "0.1.0"
 
 from dataingestiontohana_spark.session import get_spark  # noqa: F401
-from dataingestiontohana_spark.catalog import TABLES, load_tables  # noqa: F401
+from dataingestiontohana_spark.catalog import TABLES  # noqa: F401

@@ -157,22 +157,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return shared_frame(
         spark, "table", (os.path.abspath(sf_dir), name), build
     )
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    """Load parquet tables and register each as a temp view.
-
-    Returns {name: DataFrame}. Views let the SQL surface and the
-    DataFrame surface share one catalog (same Catalyst plans).
-    """
-    out: dict[str, DataFrame] = {}
-    for name in names:
-        path = table_path(sf_dir, name)
-        if not os.path.exists(path):
-            continue
-        df = spark.read.parquet(path)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

@@ -3,9 +3,6 @@
 from dataingestiontohana_spark.functions.text import (  # noqa: F401
     normalize_text,
     tokens,
-    word_shingles,
-    minhash_signature,
-    simhash_bits,
 )
 from dataingestiontohana_spark.functions.vector import (  # noqa: F401
     dot,

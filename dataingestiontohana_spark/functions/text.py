@@ -1,15 +1,12 @@
 """Text-pipeline column expressions: normalization, tokenization,
-shingling, MinHash, SimHash.
+word n-grams and HTML stripping, with the ANSI-SQL twins the DuckDB
+oracles compose from.
 
 All of these are compositions of built-in ``pyspark.sql.functions`` —
 they run inside whole-stage codegen on the JVM with zero Python in the
 hot path, which is what makes them viable over 100 TB of documents.
-
-MinHash/SimHash are the standard near-duplicate primitives from
-Broder (1997) "On the resemblance and containment of documents" and
-Charikar (2002) "Similarity estimation techniques from rounding
-algorithms"; the LSH banding analysis follows Leskovec/Rajaraman/Ullman,
-"Mining of Massive Datasets" ch. 3.
+The MinHash/SimHash near-duplicate primitives are DataFrame operators
+in operators/dedup.py.
 """
 
 from __future__ import annotations
@@ -28,94 +25,6 @@ def normalize_text(col: Column | str) -> Column:
 def tokens(col: Column | str) -> Column:
     """Whitespace tokens of the normalized text (array<string>)."""
     return F.split(normalize_text(col), " ")
-
-
-def word_shingles(col: Column | str, n: int = 3) -> Column:
-    """n-word shingles as array<string>; empty array when < n tokens.
-
-    Built as transform over an index sequence — no explode, so the row
-    count (and therefore shuffle width) is unchanged.
-    """
-    toks = tokens(col)
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(-1)))
-    return F.when(F.size(toks) >= n, F.transform(
-        idx,
-        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(n)]),
-    )).otherwise(F.array().cast("array<string>"))
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature (array<bigint>, length num_hashes).
-
-    hash_i(S) = min over shingles s of (a_i * x(s) + b_i) mod p — the
-    standard universal-hash permutation family over a single
-    md5-derived base x(s) (leading 60 bits of md5(s) mod p,
-    p = 2^31 - 1), with the same fixed seeded (a_i, b_i) constants as
-    the operator-path formulation in operators/dedup.py, so both
-    formulations fingerprint identically and stay reproducible in
-    DuckDB ANSI SQL (md5 is byte-identical across engines; the rest is
-    64-bit-safe integer arithmetic). Empty shingle sets get a sentinel
-    signature of -(i+1) (so two empty docs still collide, and never
-    with non-empty ones: real hash values are non-negative).
-    """
-    from dataingestiontohana_spark.operators.dedup import (
-        MINHASH_PRIME,
-        minhash_coeffs,
-    )
-
-    def x_of(s: Column) -> Column:
-        return (
-            F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
-            % MINHASH_PRIME
-        )
-
-    mins = [
-        F.coalesce(
-            F.array_min(
-                F.transform(shingles, lambda s: (a * x_of(s) + b) % MINHASH_PRIME)
-            ),
-            F.lit(-(i + 1)).cast("bigint"),
-        )
-        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-    ]
-    return F.array(*mins)
-
-
-def simhash_bits(col: Column | str, bits: int = 64) -> Column:
-    """SimHash bit vector (array<int> of 0/1, length ``bits``).
-
-    Classic bit-voting: each token votes +1/-1 on every bit of its
-    hash; the sign of the per-bit sum is the fingerprint bit. Bit j is
-    bit (j mod 4) of hex nibble (j div 4) of md5(token) — the same
-    DuckDB-reproducible bit source as the lane-packed operator path
-    (operators/dedup.py:simhash_fingerprints), so both formulations
-    fingerprint identically. Entirely built-in expressions.
-    """
-    hexes = F.transform(tokens(col), lambda t: F.md5(t))
-    zero = F.array_repeat(F.lit(0), bits)
-    votes = F.aggregate(
-        hexes,
-        zero,
-        lambda acc, hx: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(
-                        F.shiftright(
-                            F.conv(F.substring(hx, j // 4 + 1, 1), 16, 10)
-                            .cast("int"),
-                            j % 4,
-                        ).bitwiseAND(F.lit(1))
-                        == 1,
-                        F.lit(1),
-                    ).otherwise(F.lit(-1))
-                    for j in range(bits)
-                ]
-            ),
-            lambda a, v: a + v,
-        ),
-    )
-    return F.transform(votes, lambda v: F.when(v > 0, F.lit(1)).otherwise(F.lit(0)))
 
 
 # The ANSI-SQL twins of normalize_text()/tokens() for DuckDB oracles —
@@ -147,7 +56,7 @@ def word_bigrams(col: Column | str) -> Column:
     """Adjacent-token pairs as array<struct> — arrays_zip of the two
     offset slices of the token array (fields "0" = left, "1" = right).
 
-    WHY not word_shingles(n=2): the transform() lambda there runs
+    WHY not transform() over an index sequence: its lambda runs
     INTERPRETED per element (measured 7.5 s vs 0.8 s for this shape on
     the sf0.1 corpus); slice + arrays_zip stay inside whole-stage
     codegen, and the row count is unchanged until the caller explodes.

@@ -1,10 +1,5 @@
 """DataFrame -> DataFrame operators (the engine's composite ops)."""
 
-from dataingestiontohana_spark.operators.bpe import (  # noqa: F401
-    bpe_encode,
-    learn_bpe,
-    word_counts,
-)
 from dataingestiontohana_spark.operators.chunking import (  # noqa: F401
     chunk_windows,
     pack_chunks,
@@ -23,17 +18,9 @@ from dataingestiontohana_spark.operators.dedup_store import (  # noqa: F401
     dedup_against_store,
     write_signature_store,
 )
-from dataingestiontohana_spark.operators.layout import (  # noqa: F401
-    rowgroup_skip_stats,
-    zorder_write,
-    zvalue,
-)
 from dataingestiontohana_spark.operators.ivf import (  # noqa: F401
-    append_to_ivf_index,
     ivf_topk,
     ivf_topk_batch,
-    ivf_topk_from_index,
-    write_ivf_index,
 )
 from dataingestiontohana_spark.operators.multimodal import (  # noqa: F401
     decode_media,
@@ -54,10 +41,8 @@ from dataingestiontohana_spark.operators.rollup import (  # noqa: F401
     hypertable_rollup,
 )
 from dataingestiontohana_spark.operators.sketches import (  # noqa: F401
-    bloom_merge,
     bloom_positions,
     bloom_probe,
     cms_estimate,
-    cms_merge,
     cms_table,
 )

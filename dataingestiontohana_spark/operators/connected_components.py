@@ -181,22 +181,3 @@ def _driver_components(e: DataFrame) -> DataFrame:
         f"node {node_t}, component {node_t}",
         slices=max(1, len(rows) // 100_000),
     )
-
-
-def canonical_survivors(
-    docs: DataFrame,
-    components: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """One canonical row per near-dup cluster: the minimum id of each
-    component survives; docs not in any component survive as-is."""
-    comp = components.withColumnRenamed("node", id_col)
-    # left join on the doc id; the component table is usually much
-    # smaller than the corpus but unbounded in the worst case, so the
-    # broadcast-vs-shuffle choice is left to AQE's runtime statistics
-    joined = docs.join(comp, id_col, "left")
-    keep = (
-        F.col("component").isNull()  # no near-dup evidence
-        | (F.col(id_col) == F.col("component"))  # cluster representative
-    )
-    return joined.where(keep).drop("component")

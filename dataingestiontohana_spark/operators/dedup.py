@@ -391,12 +391,11 @@ def bands_from_signatures(
     sig: DataFrame, id_col: str = "doc_id", bands: int = BANDS
 ) -> DataFrame:
     """Band an EXISTING (id, sig) signature frame -> (id, sig, band,
-    bucket) at any band count dividing the signature length (r12:
-    the store-migration primitive — re-banding persisted signatures
-    must not re-shingle documents). Bucket = md5 of the band's
-    '|'-joined min-hash values, identical expression whatever the
-    band count, so a migrated store is row-identical to one built
-    from scratch at the new geometry."""
+    bucket) at any band count dividing the signature length, without
+    re-shingling documents. Bucket = md5 of the band's '|'-joined
+    min-hash values, identical expression whatever the band count, so
+    re-banded signatures are row-identical to ones built from scratch
+    at the new geometry."""
     if NUM_HASHES % bands:
         raise ValueError(
             f"bands={bands} must divide the {NUM_HASHES}-hash signature"

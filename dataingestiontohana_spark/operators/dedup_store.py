@@ -294,100 +294,3 @@ def dedup_against_store(
     return scored.where(F.col("jaccard_sig") >= threshold).unionByName(
         replayed
     )
-
-
-def compact_store(
-    spark: SparkSession,
-    path: str,
-    deleted_ids: list | None = None,
-    id_col: str = "doc_id",
-) -> dict:
-    """Store lifecycle (r12 verdict item 6): the persisted signature
-    store only GROWS under append — crash-replayed shards land exact
-    duplicate rows, and deleted documents leave dead signatures that
-    keep producing pairs. Compaction rewrites the store dropping (a)
-    rows whose id is in ``deleted_ids`` (retention) and (b) exact
-    duplicate (id, band, bucket, sig) rows (idempotent-replay
-    absorb), preserving the band partitioning. The result is
-    ROW-IDENTICAL to a store rebuilt from scratch over the surviving
-    corpus (pytest-pinned — the incremental==recompute equivalence
-    every incremental operator here carries). A changed-text replay
-    (same id, DIFFERENT signature) is deliberately NOT resolved here:
-    the store cannot know which version is current — delete the id
-    and re-append, or let `dedup_against_store`'s re-offer flagging
-    surface it.
-
-    Crash-safe swap (the maybe_recluster_ivf lesson: Spark deletes
-    the source files of an in-place overwrite while the rebuild still
-    scans them): the compacted copy is written SIDE-BY-SIDE, the old
-    directory is renamed away, the new one renamed in, then the old
-    removed — a crash leaves either the intact old store or the
-    complete new one, never a half-rewritten directory.
-
-    Returns {"rows_before", "rows_after", "rows_dropped"}."""
-    cur = spark.read.parquet(path)
-    rows_before = cur.count()
-    keep = cur.dropDuplicates([id_col, "band", "bucket"])
-    if deleted_ids:
-        keep = keep.where(~F.col(id_col).isin(list(deleted_ids)))
-    rows_after = _swap_in(spark, path, keep)
-    return {
-        "rows_before": rows_before,
-        "rows_after": rows_after,
-        "rows_dropped": rows_before - rows_after,
-    }
-
-
-def _swap_in(spark: SparkSession, path: str, frame: DataFrame) -> int:
-    """Write ``frame`` side-by-side and rename-swap it over ``path``
-    (the crash-safe store rewrite shared by compaction and
-    migration); returns the new row count."""
-    import os
-    import shutil
-
-    tmp = path.rstrip("/") + "__compact_tmp"
-    old = path.rstrip("/") + "__compact_old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    frame.write.mode("overwrite").partitionBy("band").parquet(tmp)
-    rows_after = spark.read.parquet(tmp).count()
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-    return rows_after
-
-
-def migrate_store_bands(
-    spark: SparkSession,
-    path: str,
-    new_bands: int,
-    id_col: str = "doc_id",
-) -> dict:
-    """Re-band a persisted signature store to a new band count (r12 —
-    the geometry lifecycle: a store written at 4x4 catches Jaccard
-    >~0.5; a corpus that later needs a lower threshold wants more,
-    narrower bands). The stored ``sig`` column carries the FULL
-    signature, so migration re-derives (band, bucket) from it with
-    `bands_from_signatures` — no document re-shingling, no access to
-    the original corpus — and rename-swaps the rewritten store in.
-    Distinct (id, sig) pairs are preserved (a changed-text replay's
-    both versions keep producing their own bands, exactly as
-    compaction documents), and the result is ROW-IDENTICAL to a store
-    built from scratch at the new geometry over the same corpus
-    (pytest-pinned). Returns {"ids", "rows_before", "rows_after"}."""
-    from dataingestiontohana_spark.operators.dedup import (
-        bands_from_signatures,
-    )
-
-    cur = spark.read.parquet(path)
-    rows_before = cur.count()
-    sigs = cur.select(id_col, "sig").dropDuplicates([id_col, "sig"])
-    # count BEFORE the swap: sigs reads the store being renamed away
-    n_ids = sigs.count()
-    rebanded = bands_from_signatures(sigs, id_col, new_bands)
-    rows_after = _swap_in(spark, path, rebanded)
-    return {
-        "ids": n_ids,
-        "rows_before": rows_before,
-        "rows_after": rows_after,
-    }

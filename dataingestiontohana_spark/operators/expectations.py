@@ -142,21 +142,3 @@ def run_expectations(
             out = row if out is None else out.unionByName(row)
     assert out is not None, "no rules given"
     return out
-
-
-def row_gate(rules: list[Expectation]):
-    """Row-level composite of the row-wise rules: a boolean Column
-    that is TRUE when the row passes EVERY rule — the streaming
-    quarantine predicate (unique/fk are table-level and excluded;
-    they belong to the aggregate suite). Use with a `process` graph
-    node or any DataFrame:
-
-        good = df.where(row_gate(rules))
-        bad  = df.where(~row_gate(rules))   # the quarantine branch
-
-    Pure codegen — no Python in the hot path."""
-    cond = F.lit(True)
-    for r in rules:
-        if r.kind in ("not_null", "accepted_values", "between"):
-            cond = cond & ~_fail_condition(r)
-    return cond

@@ -11,11 +11,10 @@ Spark-native shape:
   (k-means-free variant; swap in KMeans fit offline if recall needs it).
   k centroids x 64 dims is driver-small and ships as a numpy literal.
 - Assignment: one Arrow-batched pandas UDF (argmin over a matmul) —
-  map-only, no shuffle; the cluster id becomes a partition-prunable
-  column when persisted (`partitionBy("cluster_id")`).
-- Query: centroid distances on the driver (k rows), then a filtered
-  scan of the nprobe chosen clusters — the filter prunes partitions at
-  the storage layer, which is the entire point at 100 TB.
+  map-only, no shuffle.
+- Query: centroid distances on the driver (k rows), then an IN-list
+  filter to the nprobe chosen clusters, so exact cosine runs on about
+  nprobe/k of the vectors.
 """
 
 from __future__ import annotations
@@ -124,227 +123,6 @@ def ivf_topk(
     )
 
 
-_IVF_MANIFEST = "_ivf_centroids.json"
-
-
-def _centroid_digest(centroids: np.ndarray) -> str:
-    import hashlib
-
-    return hashlib.md5(
-        np.ascontiguousarray(centroids, dtype=np.float64).tobytes()
-    ).hexdigest()
-
-
-def _write_ivf_manifest(
-    path: str, centroids: np.ndarray, baseline_mean_dist: float | None = None
-) -> None:
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    doc = {"k": int(centroids.shape[0]), "dim": int(centroids.shape[1]),
-           "digest": _centroid_digest(centroids)}
-    if baseline_mean_dist is not None:
-        doc["baseline_mean_dist"] = float(baseline_mean_dist)
-    tmp = os.path.join(path, _IVF_MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(doc, f)
-    os.replace(tmp, os.path.join(path, _IVF_MANIFEST))
-
-
-def _check_ivf_manifest(path: str, centroids: np.ndarray, op: str) -> None:
-    """The coarse quantizer is part of the index's identity: postings
-    filed under one centroid set are garbage under another (silently —
-    probes just miss true neighbors). Same adoption rule as the
-    bucketed-layout manifest (operators/skew.py): a mismatch is an
-    error, never a guess. A pre-manifest index (missing sidecar) is
-    also refused — rebuild with write_ivf_index."""
-    import json
-    import os
-
-    try:
-        with open(os.path.join(path, _IVF_MANIFEST)) as f:
-            m = json.load(f)
-    except (OSError, ValueError) as ex:
-        raise ValueError(
-            f"{op}: no centroid manifest at {path}; rebuild the index "
-            "with write_ivf_index"
-        ) from ex
-    if m.get("digest") != _centroid_digest(centroids):
-        raise ValueError(
-            f"{op}: supplied centroids do not match the index at {path} "
-            f"(k={m.get('k')}, dim={m.get('dim')}) — appending or probing "
-            "with a different coarse quantizer silently corrupts results; "
-            "re-cluster with write_ivf_index instead"
-        )
-
-
-def _mean_assign_dist(assigned: DataFrame, centroids: np.ndarray) -> float:
-    """Mean cosine distance (1 - cos) of every vector to its ASSIGNED
-    centroid — the index's quantization-quality scalar. Map-only
-    pandas UDF + one global avg: one scan, no shuffle beyond the
-    final 1-row aggregate, so measuring drift on a 100 TB index costs
-    one pass over the postings it already owns."""
-    cents = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    cents_list = cents.tolist()
-
-    @F.pandas_udf("double")
-    def dist(emb: pd.Series, cid: pd.Series) -> pd.Series:
-        c = np.asarray(cents_list)
-        mat = np.stack(emb.apply(np.asarray, dtype=np.float64).values)
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0  # zero vector: dist 1 - 0, never NaN
-        mat = mat / norms
-        sims = np.einsum(
-            "ij,ij->i", mat, c[cid.to_numpy(dtype=np.int64)]
-        )
-        return pd.Series(1.0 - sims)
-
-    mean = assigned.select(
-        F.avg(dist(F.col("embedding"), F.col("cluster_id"))).alias("d")
-    ).head()["d"]
-    if mean is None:
-        raise ValueError(
-            "IVF index holds no postings — cannot measure assignment "
-            "quality over an empty index"
-        )
-    return float(mean)
-
-
-def write_ivf_index(vecs: DataFrame, centroids: np.ndarray, path: str) -> None:
-    """Persist the inverted-file layout: one directory per cluster
-    (`partitionBy("cluster_id")`), plus a centroid-manifest sidecar
-    that append/query validate against (the quantizer IS the index
-    identity). The manifest also records the index's BASELINE mean
-    centroid-to-member distance, the drift reference `ivf_drift`
-    measures against. The one-time layout cost turns every later probe
-    into a storage-level partition prune — at 100 TB a query reads
-    ~nprobe/k of the bytes, verified by plan + file-list in
-    tests/test_ivf.py."""
-    assign_clusters(vecs, centroids).write.mode("overwrite").partitionBy(
-        "cluster_id"
-    ).parquet(path)
-    baseline = _mean_assign_dist(
-        vecs.sparkSession.read.parquet(path), centroids
-    )
-    _write_ivf_manifest(path, centroids, baseline)
-
-
-def ivf_drift(spark, path: str, centroids: np.ndarray) -> dict:
-    """Quantization drift of a persisted index (r7 verdict item 6):
-    appends file new vectors under FROZEN centroids, so as the corpus
-    distribution moves the mean centroid-to-member distance grows and
-    probe recall decays. Returns ``{mean_dist, baseline_mean_dist,
-    ratio}`` where ratio = mean / baseline; 1.0 means the index still
-    quantizes like the day it was built."""
-    import json
-    import os
-
-    _check_ivf_manifest(path, centroids, "ivf_drift")
-    with open(os.path.join(path, _IVF_MANIFEST)) as f:
-        m = json.load(f)
-    baseline = m.get("baseline_mean_dist")
-    if baseline is None:
-        raise ValueError(
-            f"ivf_drift: index at {path} predates drift tracking; "
-            "rebuild with write_ivf_index to record a baseline"
-        )
-    mean = _mean_assign_dist(spark.read.parquet(path), centroids)
-    return {
-        "mean_dist": mean,
-        "baseline_mean_dist": float(baseline),
-        "ratio": mean / float(baseline) if baseline else float("inf"),
-    }
-
-
-def maybe_recluster_ivf(
-    spark,
-    path: str,
-    centroids: np.ndarray,
-    threshold: float = 1.2,
-    k: int | None = None,
-) -> tuple[np.ndarray, bool, dict]:
-    """The drift-triggered compaction step of the index lifecycle:
-    measure drift; past ``threshold`` re-derive centroids over the
-    CURRENT corpus (same deterministic smallest-hash pick — appended
-    ids enter the candidate set, so the quantizer follows the data)
-    and rewrite the whole layout with `write_ivf_index` (which records
-    the fresh baseline). Below threshold the index is untouched.
-    Returns (active_centroids, reclustered?, drift_stats).
-
-    Scale shape: the trigger costs one map-only scan; the rewrite is
-    the same one-time layout cost as the original build and runs only
-    when quantization has measurably decayed — the standard
-    append-then-compact rhythm of IVF maintenance (Jegou et al. §V)."""
-    import os
-    import shutil
-
-    stats = ivf_drift(spark, path, centroids)
-    if stats["ratio"] <= threshold:
-        return centroids, False, stats
-    grown = spark.read.parquet(path).drop("cluster_id")
-    new_cents = sample_centroids(grown, k=k or int(centroids.shape[0]))
-    # rebuild SIDE-BY-SIDE, then swap via rename-aside: an in-place
-    # overwrite would delete the very files the rebuild job is still
-    # scanning. The swap is two renames with the rmtree LAST —
-    # (live -> .old, .rebuild -> live, rm .old) — so a crash at ANY
-    # point leaves a recoverable directory: before the first rename
-    # the live index is intact; between the renames the complete old
-    # copy sits at .old (restore = one rename back); after the second
-    # rename the new index is live and .old is garbage. The
-    # rmtree-then-rename ordering had a window with NO directory at
-    # `path` at all, where readers got a raw path-not-found instead of
-    # the documented missing-manifest refusal.
-    rebuild = path.rstrip("/") + ".rebuild"
-    old = path.rstrip("/") + ".old"
-    write_ivf_index(grown, new_cents, rebuild)
-    if os.path.exists(old):  # leftover from a crashed prior swap
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(rebuild, path)
-    shutil.rmtree(old)
-    return new_cents, True, stats
-
-
-def ivf_topk_from_index(
-    spark,
-    path: str,
-    query_vec: list[float],
-    centroids: np.ndarray,
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Query the persisted IVF index: the IN-list on the partition
-    column becomes directory-level pruning (PartitionFilters in the
-    scan node — never touches non-probed clusters' files). The
-    centroids must be the index's own (manifest-validated)."""
-    _check_ivf_manifest(path, centroids, "ivf_topk_from_index")
-    return _probe_topk(
-        spark.read.parquet(path),
-        _probe_ids(query_vec, centroids, nprobe),
-        query_vec,
-        k,
-        id_col,
-    )
-
-
-def append_to_ivf_index(vecs: DataFrame, centroids: np.ndarray, path: str) -> None:
-    """Incremental index maintenance: assign the NEW vectors map-only
-    (same frozen centroids — the coarse quantizer must not move, or
-    existing postings would be misfiled) and append into the cluster
-    directories. Ingest work scales with the shard; existing postings
-    never rewrite. Periodic re-clustering (new centroids + full
-    write_ivf_index) is the standard compaction when drift accumulates.
-    The manifest check makes the frozen-quantizer precondition a hard
-    error: re-deriving centroids over the grown corpus and appending
-    with them would silently misfile every new posting."""
-    _check_ivf_manifest(path, centroids, "append_to_ivf_index")
-    assign_clusters(vecs, centroids).write.mode("append").partitionBy(
-        "cluster_id"
-    ).parquet(path)
-
-
 def ivf_topk_batch(
     vecs: DataFrame,
     queries: DataFrame,
@@ -365,8 +143,8 @@ def ivf_topk_batch(
       ships in the task closure with a per-query probe-cluster mask
       computed in numpy against the centroids.
     - The corpus scan filters to the UNION of all probed clusters
-      (IN-list on cluster_id — directory pruning over a persisted
-      index layout), so un-probed clusters are never read.
+      (IN-list on cluster_id), so un-probed clusters are never
+      scored.
     - One mapInPandas does a B x d @ d x Q matmul per Arrow batch and
       emits (query_id, vec_id, cos_sim) ONLY where the vector's
       cluster is probed by that query — output rows = sum over

@@ -61,87 +61,3 @@ def scd2_apply(
         .withColumn(is_current, F.lit(True))
     )
     return untouched.unionByName(closing).unionByName(fresh)
-
-
-def merge_into_partitioned(
-    spark,
-    path: str,
-    updates: DataFrame,
-    key: str,
-    part_col: str,
-    check_partition_moves: bool = False,
-) -> list:
-    """Partition-scoped MERGE into a partitioned parquet table — the
-    concrete form of the 100 TB story in SCALING.md: a CDC batch must
-    not rewrite 100 TB, it rewrites only the file groups it touches.
-
-    1. The touched partition values come from the (small) update batch
-       — one distinct+collect, CDC-sized by assumption.
-    2. ONLY those partitions are read back (the IN-list predicate is a
-       directory-pruning partition filter, verified by the partition-
-       pruning plan tests) and merged with the classic
-       anti-join + union (updates broadcast).
-    3. The merged slice is written with DYNAMIC partition overwrite:
-       Spark replaces exactly the partition directories present in the
-       written frame and leaves every other partition's files
-       untouched on disk (asserted file-for-file in the test).
-
-    PRECONDITION — the partition value must be immutable per key (the
-    standard partitioned-CDC contract: part_col is derived from the
-    key or otherwise never changes). An update that MOVES a key to a
-    new partition would leave the stale row in the old partition
-    untouched — silent duplication. A partition-changing change must
-    ship as an explicit delete + insert, or go through the full-table
-    `merge_upsert`. Pass ``check_partition_moves=True`` to verify the
-    precondition against the table (one key+partition column-pruned
-    scan of the UNtouched partitions — opt-in because the scan is
-    exactly the cost this operator exists to avoid); violations raise
-    with the offending keys.
-
-    The eager localCheckpoint between read and write is load-bearing:
-    it materializes the merged slice on the executors and cuts the
-    plan's lineage to `path`, without which Spark rejects overwriting
-    a path that is also being read. Returns the touched partition
-    values (callers log/audit them).
-
-    At 100 TB: work scales with the touched slice, not the table.
-    A transactional format (Delta/Iceberg) adds snapshot isolation and
-    file-level (not partition-level) skipping on top of this exact
-    shape; the jars are absent in this image.
-    """
-    touched = [r[0] for r in updates.select(part_col).distinct().collect()]
-    if any(v is None for v in touched):
-        # isin(touched) is NULL (not true) for NULL partition values, so
-        # the null-partition slice would be excluded from the read-back
-        # merge — yet dynamic overwrite would still replace the
-        # __HIVE_DEFAULT_PARTITION__ directory with ONLY the update
-        # rows, silently deleting its pre-existing rows (round-4
-        # advice). Refuse rather than guess a semantics.
-        raise ValueError(
-            f"updates contain NULL {part_col!r} partition values; "
-            "partition-scoped MERGE requires a concrete partition per "
-            "update row (map NULLs to a sentinel partition upstream)"
-        )
-    if check_partition_moves:
-        moved = (
-            spark.read.parquet(path)
-            .where(~F.col(part_col).isin(touched))
-            .select(key)
-            .join(F.broadcast(updates.select(key).distinct()), key, "inner")
-            .limit(20)
-            .collect()
-        )
-        if moved:
-            raise ValueError(
-                "updates move keys across partitions (stale copies would "
-                f"survive): {[r[0] for r in moved]}"
-            )
-    slice_df = spark.read.parquet(path).where(F.col(part_col).isin(touched))
-    merged = merge_upsert(slice_df, updates, key).localCheckpoint(eager=True)
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(part_col)
-        .parquet(path)
-    )
-    return touched

@@ -265,39 +265,6 @@ def bloom_probe_sql(
     )
 
 
-# ---------------------------------------------------- mergeability
-
-
-def cms_merge(*tables: DataFrame) -> DataFrame:
-    """Union Count-Min sketches by counter addition — CMS is LINEAR:
-    sketch(A ⊎ B) equals the elementwise sum of sketch(A) and
-    sketch(B), exactly (not approximately), because every counter is
-    a plain sum over its bucket's stream. That is what makes the
-    sketch an incremental corpus statistic: build one small
-    (depth, bucket, cnt) table per ingest shard, store them, and fold
-    with this function — no re-scan of history, ever. The merge
-    itself reduces <= depth*width rows per shard.
-    """
-    out = tables[0]
-    for t in tables[1:]:
-        out = out.unionByName(t)
-    return out.groupBy("depth", "bucket").agg(
-        F.sum("cnt").alias("cnt")
-    )
-
-
-def bloom_merge(*position_sets: DataFrame) -> DataFrame:
-    """Union Bloom filters by OR-ing their bits — i.e. the distinct
-    union of position rows. Exact for the same reason as
-    :func:`cms_merge`: the filter is a pure set of hash positions.
-    The result stays hard-capped at m_bits rows.
-    """
-    out = position_sets[0]
-    for t in position_sets[1:]:
-        out = out.unionByName(t)
-    return out.distinct()
-
-
 # ---------------------------------------------------------------- HLL
 
 # p: register-index bits (m = 2^p registers); the remaining value
@@ -315,8 +282,8 @@ def hll_registers(
     """HyperLogLog register table as a DataFrame: (*by, bucket, reg) —
     at most 2^p rows per ``by`` group, one per OCCUPIED register.
     ``by`` columns produce one independent sketch per group (e.g. one
-    per day/shard), each individually mergeable via :func:`hll_merge`
-    or an element-wise MAX across groups.
+    per day/shard); an element-wise MAX of ``reg`` per bucket across
+    groups merges them into the sketch of their union.
 
     Flajolet et al. (2007), "HyperLogLog: the analysis of a
     near-optimal cardinality estimation algorithm": each value's
@@ -353,18 +320,6 @@ def hll_registers(
         .groupBy(*by, "bucket")
         .agg(F.max("reg").alias("reg"))
     )
-
-
-def hll_merge(*tables: DataFrame) -> DataFrame:
-    """Union HLL sketches by element-wise register MAX — like CMS and
-    Bloom the structure is a pure stream reduction, so
-    sketch(A ∪ B) == merge(sketch(A), sketch(B)) EXACTLY: max is
-    associative, commutative, idempotent. Per-shard register tables
-    (<= 2^p rows each) fold without ever re-scanning history."""
-    out = tables[0]
-    for t in tables[1:]:
-        out = out.unionByName(t)
-    return out.groupBy("bucket").agg(F.max("reg").alias("reg"))
 
 
 def hll_estimate(registers: DataFrame, p: int = _HLL_P) -> DataFrame:

@@ -139,12 +139,6 @@ def _is_spark_table_dir(path: str) -> bool:
     )
 
 
-def plan_has_exchange(df: DataFrame) -> bool:
-    """True if the physical plan contains a shuffle exchange — the
-    test hook for asserting co-located joins."""
-    return "Exchange" in df._jdf.queryExecution().executedPlan().toString()
-
-
 def warehouse_table_dir(spark, table_name: str) -> str:
     """The directory saveAsTable would use for an unqualified managed
     table — where a previous process's layout survives when the

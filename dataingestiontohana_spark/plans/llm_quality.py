@@ -28,8 +28,8 @@ def q74_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     lambdas — bigrams are `arrays_zip` of two `slice`s of the token
     array (an array<struct> whose struct equality IS bigram equality),
     and distinct counts are native `array_distinct`; every expression
-    stays in whole-stage codegen. (The first cut used the generic
-    `word_shingles` transform-lambda and cost 19.5 s at sf0.1;
+    stays in whole-stage codegen. (The first cut built shingles with a
+    generic transform() lambda and cost 19.5 s at sf0.1;
     this form runs in ~1 s — the interpreted-lambda tax, again.)
     The only cross-row step is the global top-25, which Spark executes
     as per-partition TakeOrderedAndProject + driver merge. Both

@@ -1394,9 +1394,8 @@ def q160_feature_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE-PASS exact-integer Gram matrix — the redundancy check a
     feature platform runs before training (two near-duplicate
     dimensions mean wasted width and unstable attribution). This is
-    the d x d half of PCA: the same pass that feeds covariance
-    eigen-solves (operators/power_iteration.py proves the
-    eigenvector step against numpy).
+    the d x d half of PCA: the same pass feeds a covariance
+    eigen-solve.
 
     Exactness: values quantize to the 1e-6 grid (int64, the q36b/q73
     convention); each Arrow batch emits its int64 partial Gram (a

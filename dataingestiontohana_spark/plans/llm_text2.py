@@ -223,8 +223,8 @@ def q104_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-count shuffles the full vocabulary; the HLL side reduces
     every partition to <= 256 (bucket, max-rank) partials before ONE
     tiny exchange — fixed state, any corpus size, and per-shard
-    register tables fold incrementally (hll_merge) without re-scanning
-    history. The exact count is carried here as the audit column, the
+    register tables fold incrementally (element-wise MAX per bucket)
+    without re-scanning history. The exact count is carried here as the audit column, the
     same role as q94's exact_cnt.
     """
     from dataingestiontohana_spark.functions.text import tokens

@@ -4,7 +4,6 @@ from dataingestiontohana_spark.sources.generator import (  # noqa: F401
     SENSOR_SCHEMA,
     sensor_rows,
     sensor_csv_lines,
-    sensor_rate_stream,
     write_sensor_csv_files,
 )
 from dataingestiontohana_spark.sources.csv_envelope import (  # noqa: F401

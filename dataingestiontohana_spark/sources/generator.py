@@ -4,9 +4,8 @@ a CSV string message", prepending a monotonically increasing COUNTER).
 
 Batch form: `spark.range` + deterministic column synthesis (every field
 is a pure function of `counter`, so any two runs — and any partitioning
-— produce identical rows). Streaming form: the rate source's `value`
-becomes the counter with the same synthesis, giving a replayable
-unbounded stream.
+— produce identical rows). Streaming form: the same rows written as
+CSV text files, which the file source replays like a Kafka topic.
 
 Schema mirrors the reference DDL (`README.md:144-146`):
 counter, deviceid INT; temperature/humidity/co2/co/lpg/smoke/light/sound
@@ -110,15 +109,6 @@ def csv_line(df: DataFrame) -> DataFrame:
 def sensor_csv_lines(spark: SparkSession, n: int, start: int = 0) -> DataFrame:
     """(counter, value: csv-string) message bodies."""
     return csv_line(sensor_rows(spark, n, start))
-
-
-def sensor_rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Streaming: unbounded sensor rows from the rate source (replayable
-    within a run; for durable replay use Kafka or files)."""
-    rate = spark.readStream.format("rate").option(
-        "rowsPerSecond", str(rows_per_second)
-    ).load()
-    return rate.select(*_sensor_columns(F.col("value")))
 
 
 def write_sensor_csv_files(

@@ -7,10 +7,9 @@ spark-sql-kafka-0-10 connector jar nor network access to fetch it, so
 no socket-level fake broker can help — Spark has no Kafka client to
 speak to one (`readStream.format("kafka")` fails at data-source
 lookup). What CAN be verified without the jar is everything the
-engine builds ON TOP of the connector: the envelope projection
-(`streaming/kafka.py::envelope_columns`), the CSV body parse
-(`parse_sensor_kafka`), per-partition offset ordering, commit-token
-construction, and checkpointed replay. This module provides a
+engine builds ON TOP of the connector: the CSV body parse
+(`parse_sensor_kafka`), per-partition offset ordering and
+checkpointed replay. This module provides a
 wire-shaped substitute for exactly that layer:
 
 - **Broker** = a directory; **topic** = a subdirectory; **partition**

@@ -29,10 +29,11 @@ class SinkAudit:
 
 
 def audit_sink(connection, table: str, key: str = "counter") -> SinkAudit:
-    """Run the Q24 audit on a DBAPI connection's sink table."""
+    """Run the Q24 audit on a DBAPI connection's sink table; an empty
+    table spans 0 keys."""
     q = (
         f'SELECT COUNT(*), COUNT(DISTINCT "{key}"), '
-        f'MAX("{key}") - MIN("{key}") + 1 FROM "{table}"'
+        f'COALESCE(MAX("{key}") - MIN("{key}") + 1, 0) FROM "{table}"'
     )
     row = connection.execute(q).fetchone()
     return SinkAudit(n_rows=row[0], uniq=row[1], span=row[2])

@@ -19,8 +19,8 @@ Requires the spark-sql-kafka connector jar on the classpath
 (`spark.jars.packages=org.apache.spark:spark-sql-kafka-0-10_2.13:<ver>`);
 absent in this container, so `.load()`/`.start()` raise. The builders
 and option logic are unit-tested, and everything DOWNSTREAM of the
-connector (envelope projection, typed parse, commit tokens, offset
-replay, the producer->consumer->upsert graph) runs end-to-end against
+connector (typed parse, offset replay, the
+producer->consumer->upsert graph) runs end-to-end against
 `sources/kafkafake.py` — a Python Data Source with the connector's
 exact schema and per-partition offset semantics
 (tests/test_kafka_integration.py); only the wire protocol itself
@@ -79,22 +79,6 @@ def write_batch_to_kafka(df: DataFrame, brokers: str, topic: str) -> None:
     for k, v in kafka_sink_options(brokers, topic).items():
         writer = writer.option(k, v)
     writer.save()
-
-
-def envelope_columns(kafka_df: DataFrame) -> DataFrame:
-    """Project the reference's wiretap attribute set from the Kafka
-    source schema, including the commit token (topic/partition/offset,
-    `images/wiretapAtMostOnce.png`)."""
-    return kafka_df.select(
-        F.col("value"),
-        F.col("topic"),
-        F.col("partition"),
-        F.col("offset"),
-        F.col("timestamp"),
-        F.concat_ws(
-            "/", F.col("topic"), F.col("partition"), F.col("offset")
-        ).alias("commit_token"),
-    )
 
 
 def parse_sensor_kafka(kafka_df: DataFrame) -> DataFrame:

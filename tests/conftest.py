@@ -9,6 +9,12 @@ SF001 = "/root/testdata/sf0.01"
 SF01 = "/root/testdata/sf0.1"
 
 
+def plan_has_exchange(df) -> bool:
+    """True if the physical plan contains a shuffle exchange: asserts
+    that a join is co-located."""
+    return "Exchange" in df._jdf.queryExecution().executedPlan().toString()
+
+
 @pytest.fixture(scope="session")
 def spark():
     # get_spark's default 24g max heap exceeds a 15 GB host's memory:

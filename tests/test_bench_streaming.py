@@ -4,7 +4,11 @@ committed BASELINE.md numbers stay re-runnable."""
 
 from __future__ import annotations
 
-from bench_streaming import run_streaming_bench
+import sqlite3
+
+import pytest
+
+from bench_streaming import _audit, run_streaming_bench
 
 
 def test_streaming_bench_runs_and_audits(spark):
@@ -31,3 +35,20 @@ def test_streaming_bench_runs_and_audits(spark):
             <= warm["rows_per_sec"]
             <= warm["max_rows_per_sec"]
         )
+
+
+@pytest.mark.parametrize(
+    "counters", [[], [0, 1], [0, 2, 3], [0, 1, 1, 2]],
+    ids=["empty", "short", "gap", "duplicate"],
+)
+def test_bench_audit_raises_on_mismatch(tmp_path, counters):
+    db = str(tmp_path / "sink.db")
+    con = sqlite3.connect(db)
+    con.execute('CREATE TABLE "sensor_sink" ("counter" INTEGER)')
+    con.executemany(
+        'INSERT INTO "sensor_sink" VALUES (?)', [(c,) for c in counters]
+    )
+    con.commit()
+    con.close()
+    with pytest.raises(RuntimeError, match="audit failed"):
+        _audit(db, 3, "exactly-once")

@@ -1,5 +1,5 @@
 """Connected components: cross-checked against a pure-Python
-union-find on the same edges, plus the canonical-survivor contract."""
+union-find on the same edges."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from dataingestiontohana_spark.catalog import load_table
 from dataingestiontohana_spark.operators.connected_components import (
-    canonical_survivors,
     connected_components,
 )
 from dataingestiontohana_spark.operators.dedup import minhash_candidates
@@ -62,20 +61,6 @@ def test_chain_needs_multiple_rounds(spark):
     )
     got = {r.node: r.component for r in connected_components(df).collect()}
     assert got == {i: 0 for i in range(n + 1)}
-
-
-def test_canonical_survivors_keep_min_and_singletons(spark):
-    docs = spark.createDataFrame(
-        [(i, f"t{i}") for i in range(6)], "doc_id long, text string"
-    )
-    comp = connected_components(
-        spark.createDataFrame([(1, 4), (2, 5)], "id_a long, id_b long")
-    )
-    kept = sorted(
-        r.doc_id for r in canonical_survivors(docs, comp).collect()
-    )
-    # 4 and 5 fold into 1 and 2; 0 and 3 untouched
-    assert kept == [0, 1, 2, 3]
 
 
 def test_distributed_path_matches_driver_path(spark):

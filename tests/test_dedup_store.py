@@ -279,129 +279,3 @@ def test_store_side_never_sort_merge_joins(spark, tmp_path):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan, plan
     assert "BroadcastHashJoin" in plan
-
-
-def test_compact_store_equals_rebuild_on_mutated_corpus(spark, tmp_path):
-    """r12 verdict item 6 (store lifecycle): after appends, a
-    crash-REPLAYED duplicate append, and a deletion set, the
-    compacted store must be ROW-IDENTICAL to a store rebuilt from
-    scratch over the surviving corpus — the incremental==recompute
-    equivalence the other incremental operators carry."""
-    from dataingestiontohana_spark.operators.dedup_store import (
-        compact_store,
-    )
-
-    store = str(tmp_path / "sigstore")
-    rebuilt = str(tmp_path / "rebuilt")
-    d = load_table(spark, SF0001, "documents")
-    corpus = d.where(F.col("doc_id") % 3 == 0)
-    shard1 = d.where(F.col("doc_id") % 3 == 1)
-    shard2 = d.where(F.col("doc_id") % 3 == 2)
-
-    write_signature_store(corpus, store)
-    append_to_store(shard1, store)
-    append_to_store(shard1, store)  # crash replay: identical rows x2
-    append_to_store(shard2, store)
-    deleted = [r["doc_id"] for r in shard2.limit(5).collect()]
-    stats = compact_store(spark, store, deleted_ids=deleted)
-    assert stats["rows_dropped"] > 0
-
-    survivors = d.where(
-        (F.col("doc_id") % 3 != 2) | ~F.col("doc_id").isin(deleted)
-    )
-    write_signature_store(survivors, rebuilt)
-    got = sorted(
-        map(tuple, spark.read.parquet(store)
-            .select("doc_id", "band", "bucket").collect())
-    )
-    want = sorted(
-        map(tuple, spark.read.parquet(rebuilt)
-            .select("doc_id", "band", "bucket").collect())
-    )
-    assert got == want and len(got) > 0
-    # the compacted store still serves the incremental join, and the
-    # deleted docs no longer produce store pairs
-    probe = dedup_against_store(
-        spark, d.where(F.col("doc_id").isin(deleted)), store,
-        threshold=0.0,
-    )
-    reoffers = probe.where(F.col("id_a") == F.col("id_b")).collect()
-    assert reoffers == []  # deleted ids are really gone
-
-
-def test_compact_store_is_idempotent_and_band_partitioned(
-    spark, tmp_path
-):
-    """Compacting twice is a no-op the second time, and the store
-    keeps its band partitioning (the partition-pruned join layout)."""
-    import os
-
-    from dataingestiontohana_spark.operators.dedup_store import (
-        compact_store,
-    )
-
-    store = str(tmp_path / "s")
-    d = load_table(spark, SF0001, "documents")
-    write_signature_store(d, store)
-    append_to_store(d.limit(3), store)  # re-offer rows: exact dups
-    s1 = compact_store(spark, store)
-    assert s1["rows_dropped"] > 0
-    s2 = compact_store(spark, store)
-    assert s2["rows_dropped"] == 0
-    assert any(e.startswith("band=") for e in os.listdir(store))
-
-
-def test_migrate_store_bands_equals_rebuild(spark, tmp_path):
-    """r12 (store geometry lifecycle): re-banding a persisted store
-    from the stored signatures — no re-shingling — must be
-    ROW-IDENTICAL to a store built from scratch at the new band
-    count, including the changed-text-replay case where one id
-    carries two distinct signatures (both versions keep banding)."""
-    from dataingestiontohana_spark.operators.dedup_store import (
-        migrate_store_bands,
-    )
-
-    store = str(tmp_path / "sigstore")
-    rebuilt = str(tmp_path / "rebuilt8")
-    d = load_table(spark, SF0001, "documents").limit(40)
-    mutated = d.limit(4).withColumn(
-        "text", F.concat(F.col("text"), F.lit(" CHANGED"))
-    )
-
-    write_signature_store(d, store)
-    append_to_store(mutated, store)  # same ids, different signatures
-    stats = migrate_store_bands(spark, store, 8)
-
-    from dataingestiontohana_spark.operators.dedup import minhash_bands
-
-    # the from-scratch twin: every distinct (id, sig) variant's full
-    # band set (two of the four mutated docs are too short for the
-    # suffix to change their shingles, so they re-sign identically
-    # and migration's (id, sig) distinct absorbs them)
-    minhash_bands(d, bands=8).unionByName(
-        minhash_bands(mutated, bands=8)
-    ).dropDuplicates(["doc_id", "sig", "band"]).write.mode(
-        "overwrite"
-    ).partitionBy("band").parquet(rebuilt)
-    cols = ["doc_id", "sig", "band", "bucket"]
-    got = sorted(
-        (r["doc_id"], tuple(r["sig"]), r["band"], r["bucket"])
-        for r in spark.read.parquet(store).select(*cols).collect()
-    )
-    want = sorted(
-        (r["doc_id"], tuple(r["sig"]), r["band"], r["bucket"])
-        for r in spark.read.parquet(rebuilt).select(*cols).collect()
-    )
-    assert got == want and len(got) > 40 * 8
-    assert stats["ids"] > 40  # some changed texts really re-signed
-    assert stats["rows_after"] == stats["ids"] * 8
-    # band partitioning preserved at the new geometry
-    import os
-
-    bands = {e for e in os.listdir(store) if e.startswith("band=")}
-    assert bands == {f"band={i}" for i in range(8)}
-    # an illegal band count is refused before any rewrite
-    import pytest
-
-    with pytest.raises(ValueError, match="must divide"):
-        migrate_store_bands(spark, store, 5)

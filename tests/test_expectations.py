@@ -97,25 +97,3 @@ def test_rowwise_rules_share_one_scan(spark, dirty, countries):
     assert rows["a"]["n_failed"] == 1
     assert rows["b"]["n_failed"] == 1
     assert rows["c"]["n_failed"] == 3
-
-
-def test_row_gate_splits_good_and_bad(spark, dirty, countries):
-    from dataingestiontohana_spark.operators.expectations import row_gate
-
-    rules = [
-        Expectation("n", "t", "name", "not_null"),
-        Expectation("r", "t", "val", "between", {"lo": 0.0, "hi": 100.0}),
-        Expectation("d", "t", "country", "accepted_values",
-                    {"values": ["US", "DE", "FR"]}),
-        Expectation("u", "t", "id", "unique"),  # table-level: ignored here
-    ]
-    gate = row_gate(rules)
-    good = dirty.where(gate).collect()
-    bad = dirty.where(~gate).collect()
-    assert {r["id"] for r in good} == {1, 2}  # rows 1 and the first id-2 row
-    assert len(good) == 2 and len(bad) == 3
-    # quarantine + accepted partitions the input exactly
-    assert len(good) + len(bad) == dirty.count()
-    # the gate is codegen only — no python UDF in the plan
-    plan = dirty.where(gate)._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

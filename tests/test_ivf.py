@@ -69,102 +69,6 @@ def test_ivf_scans_fraction_of_data(spark, vecs):
     assert probed < total
 
 
-def test_persisted_index_prunes_partitions(spark, vecs, tmp_path):
-    """The IN-list on cluster_id becomes DIRECTORY pruning over the
-    persisted index: the scan lists only the probed clusters' files and
-    the result equals the non-persisted path exactly."""
-    from dataingestiontohana_spark.operators.ivf import (
-        ivf_topk_from_index,
-        write_ivf_index,
-    )
-
-    cents = sample_centroids(vecs, k=8)
-    qvec = [float(x) for x in vecs.where(F.col("vec_id") == 0).head()["embedding"]]
-    idx = str(tmp_path / "ivf_index")
-    write_ivf_index(vecs, cents, idx)
-
-    got = ivf_topk_from_index(spark, idx, qvec, cents, k=10, nprobe=2)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    # the IN-list is a PARTITION filter (directory pruning), not a data
-    # filter: it must appear under PartitionFilters in the scan node
-    pf = plan.split("PartitionFilters: [")[1].split("]")[0]
-    assert "cluster_id" in pf and " IN (" in pf
-    # and is fully consumed there — no residual data filter on cluster_id
-    assert "PushedFilters: []" in plan or "cluster_id" not in plan.split(
-        "PushedFilters"
-    )[1].split("]")[0]
-    # identical answer to the in-memory assignment path
-    mem = ivf_topk(vecs, qvec, cents, k=10, nprobe=2).collect()
-    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in mem]
-
-
-def test_ivf_index_append_equals_full_rebuild(spark, tmp_path):
-    """Appending a shard to the persisted index yields exactly the
-    results of rebuilding the index over the full corpus (frozen
-    centroids), and queries still prune to the probed partitions."""
-    from pyspark.sql import functions as F
-
-    from dataingestiontohana_spark.catalog import load_table
-    from dataingestiontohana_spark.operators.ivf import (
-        append_to_ivf_index,
-        ivf_topk_from_index,
-        sample_centroids,
-        write_ivf_index,
-    )
-    from tests.conftest import SF0001
-
-    e = load_table(spark, SF0001, "embeddings")
-    cents = sample_centroids(e, k=16)
-    qvec = [float(x) for x in e.where(F.col("vec_id") == 0).head()["embedding"]]
-
-    base = e.where((F.col("vec_id") % 5 != 0) & (F.col("vec_id") != 0))
-    shard = e.where((F.col("vec_id") % 5 == 0) & (F.col("vec_id") != 0))
-
-    inc_path = str(tmp_path / "ivf_inc")
-    full_path = str(tmp_path / "ivf_full")
-    write_ivf_index(base, cents, inc_path)
-    append_to_ivf_index(shard, cents, inc_path)
-    write_ivf_index(e.where(F.col("vec_id") != 0), cents, full_path)
-
-    inc = sorted(map(tuple, ivf_topk_from_index(
-        spark, inc_path, qvec, cents, k=10, nprobe=4).collect()))
-    full = sorted(map(tuple, ivf_topk_from_index(
-        spark, full_path, qvec, cents, k=10, nprobe=4).collect()))
-    assert inc == full and len(inc) == 10
-
-
-def test_ivf_index_refuses_mismatched_centroids(spark, tmp_path):
-    """The frozen-quantizer precondition is a hard error: appending or
-    probing with re-derived centroids would silently misfile postings,
-    so the centroid manifest must refuse them (the bucketed-layout
-    adoption rule)."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from dataingestiontohana_spark.catalog import load_table
-    from dataingestiontohana_spark.operators.ivf import (
-        append_to_ivf_index,
-        ivf_topk_from_index,
-        sample_centroids,
-        write_ivf_index,
-    )
-    from tests.conftest import SF0001
-
-    e = load_table(spark, SF0001, "embeddings")
-    cents = sample_centroids(e, k=8)
-    path = str(tmp_path / "ivf")
-    write_ivf_index(e.where(F.col("vec_id") != 0), cents, path)
-
-    other = sample_centroids(e.where(F.col("vec_id") > 50), k=8)
-    qvec = [float(x) for x in e.where(F.col("vec_id") == 0).head()["embedding"]]
-    with pytest.raises(ValueError, match="do not match the index"):
-        append_to_ivf_index(e.limit(5), other, path)
-    with pytest.raises(ValueError, match="do not match the index"):
-        ivf_topk_from_index(spark, path, qvec, other)
-    # the index's own centroids still work
-    assert ivf_topk_from_index(spark, path, qvec, cents, k=5).count() == 5
-
-
 def test_ivf_topk_batch_equals_per_query_loop(spark):
     """The batched retrieval must reproduce the single-query operator
     row-for-row for every query in the batch — same probes, same
@@ -225,173 +129,3 @@ def test_ivf_topk_batch_scan_prunes_to_probed_union(spark):
     # one query, nprobe=2: every returned row's cluster is one of 2
     rows = df.collect()
     assert 0 < len(rows) <= 5
-
-
-def test_ivf_drift_trigger_and_recluster_restores_recall(spark, tmp_path):
-    """Index lifecycle under append drift (r8): the corpus starts as
-    16 tight direction-clusters (good quantization), then 8 NEW
-    clusters append under the FROZEN quantizer — their members sit
-    ~orthogonal to every existing centroid, so the mean
-    centroid-to-member distance grows measurably. Past the threshold
-    `maybe_recluster_ivf` re-derives the quantizer over the grown
-    corpus and rewrites the layout; quantization heals and the
-    recall@10 floor holds against the exact brute-force twin for a
-    query from the drifted region. Fully deterministic (seeded data,
-    hash-based centroid pick)."""
-    import numpy as np
-
-    from dataingestiontohana_spark.operators.ivf import (
-        append_to_ivf_index,
-        ivf_drift,
-        ivf_topk_from_index,
-        maybe_recluster_ivf,
-        sample_centroids,
-        write_ivf_index,
-    )
-
-    rng = np.random.default_rng(67)
-
-    def cluster_rows(bases, id0, per_cluster=25, noise=0.1):
-        rows = []
-        for ci, b in enumerate(bases):
-            for j in range(per_cluster):
-                v = b + noise * rng.standard_normal(64)
-                rows.append(
-                    (id0 + ci * per_cluster + j,
-                     [float(x) for x in v])
-                )
-        return rows
-
-    old_bases = rng.standard_normal((16, 64))
-    old_bases /= np.linalg.norm(old_bases, axis=1, keepdims=True)
-    new_bases = rng.standard_normal((8, 64))
-    new_bases /= np.linalg.norm(new_bases, axis=1, keepdims=True)
-
-    schema = "vec_id long, embedding array<double>"
-    base = spark.createDataFrame(cluster_rows(old_bases, 0), schema)
-    cents = sample_centroids(base, k=16)
-    path = str(tmp_path / "ivf")
-    write_ivf_index(base, cents, path)
-
-    fresh = ivf_drift(spark, path, cents)
-    assert abs(fresh["ratio"] - 1.0) < 1e-9  # baseline == first measure
-
-    drifted = spark.createDataFrame(
-        cluster_rows(new_bases, 10_000), schema
-    )
-    append_to_ivf_index(drifted, cents, path)
-
-    after = ivf_drift(spark, path, cents)
-    assert after["ratio"] > 1.2, after  # drift is measurable
-
-    # below threshold: untouched; above: full recluster + new baseline
-    same, did, _ = maybe_recluster_ivf(
-        spark, path, cents, threshold=after["ratio"] + 1
-    )
-    assert not did and (same == cents).all()
-    new_cents, did, stats = maybe_recluster_ivf(
-        spark, path, cents, threshold=1.2, k=32
-    )
-    assert did and abs(stats["ratio"] - after["ratio"]) < 1e-9
-    post = ivf_drift(spark, path, new_cents)
-    assert post["ratio"] <= 1.0 + 1e-9  # fresh baseline, drift reset
-    assert post["mean_dist"] < after["mean_dist"]  # quantization healed
-
-    # recall@10 floor vs exact brute force on the GROWN corpus, probing
-    # from inside the drifted region (where the old quantizer was blind)
-    rows = spark.read.parquet(path).select("vec_id", "embedding").collect()
-    ids = np.array([r["vec_id"] for r in rows])
-    mat = np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
-    mat_n = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    qid = int(ids[ids >= 10_000][0])
-    qvec = mat[ids == qid][0]
-    sims = mat_n @ (qvec / np.linalg.norm(qvec))
-    sims[ids == qid] = -2.0  # exclude the query itself
-    exact = set(ids[np.argsort(-sims)[:10]].tolist())
-
-    approx = {
-        r["vec_id"]
-        for r in ivf_topk_from_index(
-            spark,
-            path,
-            [float(x) for x in qvec],
-            new_cents,
-            k=11,
-            nprobe=8,
-        ).collect()
-        if r["vec_id"] != qid
-    }
-    recall = len(exact & approx) / 10
-    assert recall >= 0.3, f"post-recluster recall {recall}"
-
-
-def test_recluster_swap_crash_leaves_recoverable_dir(spark, tmp_path, monkeypatch):
-    """r8 ADVICE: the old rmtree-then-rename swap had a window with NO
-    directory at `path` at all (raw path-not-found for readers). The
-    rename-aside swap (live -> .old, .rebuild -> live, rm .old) leaves
-    a complete recoverable directory at EVERY crash point: a crash
-    between the renames leaves the full old index at `.old` (restore =
-    one rename back), and a leftover `.old` from that crash is cleaned
-    on the next successful swap."""
-    import os
-    import shutil
-
-    import numpy as np
-
-    from dataingestiontohana_spark.operators.ivf import (
-        ivf_drift,
-        maybe_recluster_ivf,
-        sample_centroids,
-        write_ivf_index,
-    )
-
-    rng = np.random.default_rng(68)
-    rows = [
-        (i, [float(x) for x in rng.standard_normal(8)]) for i in range(64)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = sample_centroids(df, k=4)
-    path = str(tmp_path / "ivf")
-    write_ivf_index(df, cents, path)
-
-    # crash INSIDE the swap window: fail the second os.rename
-    calls = {"n": 0}
-    real_rename = os.rename
-
-    def flaky_rename(a, b):
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise OSError("simulated crash between swap renames")
-        real_rename(a, b)
-
-    # maybe_recluster_ivf does `import os` in its body — patching the
-    # global module's rename intercepts exactly its two swap renames
-    monkeypatch.setattr(os, "rename", flaky_rename)
-    try:
-        maybe_recluster_ivf(spark, path, cents, threshold=0.0)
-    except OSError:
-        pass
-    monkeypatch.setattr(os, "rename", real_rename)
-
-    # a COMPLETE recoverable copy exists: the old index at .old
-    old = path + ".old"
-    assert os.path.isdir(old)
-    assert os.path.exists(os.path.join(old, "_ivf_manifest.json")) or any(
-        f.startswith("_") or f.endswith(".json") for f in os.listdir(old)
-    ), os.listdir(old)
-    # operator recovery = one rename back; drift still measurable
-    shutil.rmtree(path + ".rebuild", ignore_errors=True)
-    real_rename(old, path)
-    stats = ivf_drift(spark, path, cents)
-    assert stats["ratio"] > 0
-
-    # next successful swap cleans a leftover .old from a prior crash
-    os.makedirs(old, exist_ok=True)
-    with open(os.path.join(old, "stale"), "w") as fh:
-        fh.write("leftover")
-    new_cents, did, _ = maybe_recluster_ivf(spark, path, cents, threshold=0.0)
-    assert did
-    assert not os.path.exists(old)
-    assert not os.path.exists(path + ".rebuild")
-    post = ivf_drift(spark, path, new_cents)
-    assert abs(post["ratio"] - 1.0) < 1e-9  # fresh baseline recorded

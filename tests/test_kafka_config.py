@@ -1,12 +1,11 @@
 """Kafka builder tests (no broker/jar in the container: option logic
-and envelope projection are testable; the wire protocol is not)."""
+and the body parse are testable; the wire protocol is not)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from dataingestiontohana_spark.streaming.kafka import (
-    envelope_columns,
     kafka_sink_options,
     kafka_source_options,
     parse_sensor_kafka,
@@ -27,7 +26,7 @@ def test_source_options_map_reference_config():
 
 def test_envelope_and_parse_on_kafka_shaped_batch(spark):
     # a batch frame with the exact Kafka source schema stands in for
-    # the wire: envelope projection + CSV parse must round-trip
+    # the wire: the CSV parse must round-trip
     lines = sensor_csv_lines(spark, 5)
     kafka_shaped = lines.select(
         F.encode("value", "utf-8").alias("value"),
@@ -36,8 +35,6 @@ def test_envelope_and_parse_on_kafka_shaped_batch(spark):
         F.col("counter").cast("long").alias("offset"),
         F.current_timestamp().alias("timestamp"),
     )
-    env = envelope_columns(kafka_shaped).collect()
-    assert env[0]["commit_token"].startswith("my_sensor_data/0/")
     parsed = parse_sensor_kafka(kafka_shaped)
     assert sorted(r["counter"] for r in parsed.collect()) == [0, 1, 2, 3, 4]
     assert dict(parsed.dtypes)["temperature"] == "double"

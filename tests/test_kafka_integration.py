@@ -110,18 +110,14 @@ def _sensor_lines(spark, n):
 
 
 def test_fake_kafka_envelope_and_typed_parse(spark, tmp_path):
-    """Producer -> topic log -> kafka-shaped stream -> envelope_columns
-    + parse_sensor_kafka: the downstream layer runs UNCHANGED on the
-    stand-in (identical schema), offsets are dense per partition, and
-    commit tokens carry topic/partition/offset."""
+    """Producer -> topic log -> kafka-shaped stream ->
+    parse_sensor_kafka: the downstream layer runs UNCHANGED on the
+    stand-in (identical schema), and offsets are dense per partition."""
     from dataingestiontohana_spark.sources.kafkafake import (
         FakeKafkaBroker,
         fake_kafka_source,
     )
-    from dataingestiontohana_spark.streaming.kafka import (
-        envelope_columns,
-        parse_sensor_kafka,
-    )
+    from dataingestiontohana_spark.streaming.kafka import parse_sensor_kafka
 
     broker = FakeKafkaBroker(str(tmp_path / "broker"))
     broker.create_topic("sensor", partitions=3)
@@ -138,7 +134,7 @@ def test_fake_kafka_envelope_and_typed_parse(spark, tmp_path):
     env_rows, typed_rows = [], []
 
     def sink(bdf, _eid):
-        env_rows.extend(envelope_columns(bdf).collect())
+        env_rows.extend(bdf.select("topic", "partition", "offset").collect())
         typed_rows.extend(parse_sensor_kafka(bdf).collect())
 
     q = (
@@ -150,11 +146,10 @@ def test_fake_kafka_envelope_and_typed_parse(spark, tmp_path):
     q.stop()
 
     assert len(env_rows) == 42
-    # offsets dense from 0 per partition; token = topic/partition/offset
+    # offsets dense from 0 per partition
     by_part = {}
     for r in env_rows:
         assert r["topic"] == "sensor"
-        assert r["commit_token"] == f"sensor/{r['partition']}/{r['offset']}"
         by_part.setdefault(r["partition"], []).append(r["offset"])
     assert len(by_part) == 3  # 42 keys spread over all 3 partitions
     for offs in by_part.values():

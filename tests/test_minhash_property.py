@@ -111,16 +111,8 @@ def test_exact_jaccard_strategies_agree(spark):
 
 def test_num_hashes_beyond_sixteen(spark):
     """The seeded coefficient family extends to any num_hashes (a
-    regression guard: the first universal-hash cut crashed for n > 16
-    and silently truncated in the column variant); smaller-n signatures
-    are a prefix of larger-n ones."""
-    from pyspark.sql import functions as F
-
-    from dataingestiontohana_spark.functions.text import (
-        minhash_signature,
-        word_shingles,
-    )
-
+    regression guard: the first universal-hash cut crashed for n > 16);
+    smaller-n signatures are a prefix of larger-n ones."""
     df = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta eta theta")],
         "doc_id long, text string",
@@ -134,10 +126,6 @@ def test_num_hashes_beyond_sixteen(spark):
         r["doc_id"]: list(r["sig"]) for r in minhash_signatures(df).collect()
     }
     assert sig32[1][:16] == sig16[1]  # prefix property
-    col24 = df.select(
-        minhash_signature(word_shingles("text"), num_hashes=24).alias("sig")
-    ).head()["sig"]
-    assert len(col24) == 24 and list(col24[:16]) == sig16[1]
 
 
 def test_direct_strategy_fails_fast_on_hot_shingle(spark):

@@ -11,7 +11,7 @@ import pytest
 
 from dataingestiontohana_spark.plans import QUERIES
 
-from tests.conftest import SF001
+from tests.conftest import SF001, plan_has_exchange
 
 
 def _optimized(df) -> str:
@@ -168,7 +168,6 @@ def test_no_unbounded_single_partition_window(spark, name):
 
 
 def test_q72_bucketed_join_is_exchange_free(spark):
-    from dataingestiontohana_spark.operators.skew import plan_has_exchange
     from dataingestiontohana_spark.plans.relational_ext import (
         bucketed_fact_tables,
     )

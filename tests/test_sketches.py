@@ -128,134 +128,6 @@ class TestSegmentDedup:
         assert out[1]["removed_tokens"] == 3
 
 
-class TestMergeability:
-    def test_cms_merge_is_exactly_linear(self, spark):
-        """sketch(A) + sketch(B) == sketch(A union-all B), counter for
-        counter — the property that makes shard-wise builds lossless."""
-        from dataingestiontohana_spark.operators.sketches import cms_merge
-
-        a_vals = [f"t{i % 11}" for i in range(60)]
-        b_vals = [f"t{i % 7}" for i in range(40)]
-        sa = cms_table(_items(spark, a_vals), "w", depth=4, width=16)
-        sb = cms_table(_items(spark, b_vals), "w", depth=4, width=16)
-        merged = {
-            (r["depth"], r["bucket"]): r["cnt"]
-            for r in cms_merge(sa, sb).collect()
-        }
-        whole = {
-            (r["depth"], r["bucket"]): r["cnt"]
-            for r in cms_table(
-                _items(spark, a_vals + b_vals), "w", depth=4, width=16
-            ).collect()
-        }
-        assert merged == whole
-
-    def test_bloom_merge_equals_whole_build(self, spark):
-        from dataingestiontohana_spark.operators.sketches import bloom_merge
-
-        a = [f"a{i}" for i in range(80)]
-        b = [f"b{i}" for i in range(80)]
-        pa = bloom_positions(_items(spark, a), "w", k=3, m_bits=2048)
-        pb = bloom_positions(_items(spark, b), "w", k=3, m_bits=2048)
-        merged = {r["pos"] for r in bloom_merge(pa, pb).collect()}
-        whole = {
-            r["pos"]
-            for r in bloom_positions(
-                _items(spark, a + b), "w", k=3, m_bits=2048
-            ).collect()
-        }
-        assert merged == whole
-
-    def test_merged_estimates_match_whole_stream(self, spark):
-        from dataingestiontohana_spark.operators.sketches import cms_merge
-
-        a_vals = ["x"] * 5 + ["y"] * 3
-        b_vals = ["x"] * 2 + ["z"] * 4
-        merged = cms_merge(
-            cms_table(_items(spark, a_vals), "w", depth=4, width=256),
-            cms_table(_items(spark, b_vals), "w", depth=4, width=256),
-        )
-        est = {
-            r["w"]: r["cms_est"]
-            for r in cms_estimate(
-                _items(spark, ["x", "y", "z"]), merged, "w", 4, 256
-            ).collect()
-        }
-        # wide sketch, 3 values: collisions essentially impossible
-        assert est == {"x": 7, "y": 3, "z": 4}
-
-
-class TestStreamingSketchStore:
-    def test_incremental_stream_build_equals_batch_sketch(
-        self, spark, tmp_path
-    ):
-        """Rolling corpus statistics on a live stream: each micro-batch
-        builds its shard CMS inside foreachBatch and folds it into a
-        persisted sketch store via cms_merge. After the stream drains,
-        the stored sketch equals the one-shot batch build over the
-        whole corpus COUNTER FOR COUNTER — the linearity theorem on the
-        actual streaming path, with restart-safe tiny state (<=
-        depth*width rows) instead of a re-scan of history."""
-        import json
-        import os
-
-        from dataingestiontohana_spark.operators.sketches import cms_merge
-
-        src = str(tmp_path / "src")
-        store = str(tmp_path / "cms_store")
-        os.makedirs(src)
-        texts = {
-            0: "spark scan join join filter",
-            1: "join filter scan scan scan",
-            2: "window agg spark spark join",
-        }
-        for b, t in texts.items():
-            with open(os.path.join(src, f"b{b}.json"), "w") as f:
-                f.write(json.dumps({"doc_id": b, "text": t}) + "\n")
-            os.utime(
-                os.path.join(src, f"b{b}.json"),
-                (1_000_000 + b, 1_000_000 + b),
-            )
-
-        def fold(batch_df, epoch_id):
-            from pyspark.sql import functions as SF
-
-            tok = batch_df.select(
-                SF.explode(SF.split(SF.col("text"), " ")).alias("w")
-            )
-            shard = cms_table(tok, "w", depth=4, width=16)
-            if os.path.exists(os.path.join(store, "_SUCCESS")):
-                prev = spark.read.parquet(store)
-                merged = cms_merge(prev, shard).localCheckpoint(eager=True)
-            else:
-                merged = shard
-            merged.write.mode("overwrite").parquet(store)
-
-        q = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .json(src)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-        all_tok = spark.createDataFrame(
-            [(w,) for t in texts.values() for w in t.split()], "w string"
-        )
-        whole = {
-            (r["depth"], r["bucket"]): r["cnt"]
-            for r in cms_table(all_tok, "w", depth=4, width=16).collect()
-        }
-        stored = {
-            (r["depth"], r["bucket"]): r["cnt"]
-            for r in spark.read.parquet(store).collect()
-        }
-        assert stored == whole
-
-
 class TestHyperLogLog:
     def test_registers_bounded_and_rank_range(self, spark):
         from dataingestiontohana_spark.operators.sketches import (
@@ -281,24 +153,6 @@ class TestHyperLogLog:
         thrice = _items(spark, [f"t{i}" for i in range(100)] * 3)
         a = sorted(map(tuple, hll_registers(once, "w").collect()))
         b = sorted(map(tuple, hll_registers(thrice, "w").collect()))
-        assert a == b
-
-    def test_merge_equals_whole_build(self, spark):
-        # merge law: registers(A ∪ B ∪ C) == fold of per-shard tables
-        # (max is associative/commutative/idempotent) — the incremental
-        # corpus-statistic contract, same as cms_merge/bloom_merge.
-        from dataingestiontohana_spark.operators.sketches import (
-            hll_merge,
-            hll_registers,
-        )
-
-        vals = [f"doc{i}" for i in range(300)]
-        whole = hll_registers(_items(spark, vals), "w")
-        shards = [
-            hll_registers(_items(spark, vals[i::3]), "w") for i in range(3)
-        ]
-        a = sorted(map(tuple, whole.collect()))
-        b = sorted(map(tuple, hll_merge(*shards).collect()))
         assert a == b
 
     def test_estimate_within_three_sigma(self, spark):
@@ -345,77 +199,6 @@ class TestHyperLogLog:
             e["s_scaled"],
             e["est"],
         )
-
-
-class TestStreamingHLLStore:
-    def test_incremental_stream_registers_equal_batch(
-        self, spark, tmp_path
-    ):
-        """The cardinality companion to the CMS store test: per-batch
-        HLL register tables fold into a persisted store via hll_merge
-        (element-wise max) on the live streaming path; the drained
-        store equals the one-shot batch registers ROW FOR ROW —
-        restart-safe <= 2^p-row state instead of a distinct-count
-        re-scan of history."""
-        import json
-        import os
-
-        from pyspark.sql import functions as SF
-
-        from dataingestiontohana_spark.operators.sketches import (
-            hll_merge,
-            hll_registers,
-        )
-
-        src = str(tmp_path / "src")
-        store = str(tmp_path / "hll_store")
-        os.makedirs(src)
-        texts = {
-            0: "spark scan join join filter",
-            1: "join filter scan scan scan",
-            2: "window agg spark spark join",
-        }
-        for b, t in texts.items():
-            with open(os.path.join(src, f"b{b}.json"), "w") as f:
-                f.write(json.dumps({"doc_id": b, "text": t}) + "\n")
-            os.utime(
-                os.path.join(src, f"b{b}.json"),
-                (1_000_000 + b, 1_000_000 + b),
-            )
-
-        def fold(batch_df, epoch_id):
-            tok = batch_df.select(
-                SF.explode(SF.split(SF.col("text"), " ")).alias("w")
-            )
-            shard = hll_registers(tok, "w")
-            if os.path.exists(os.path.join(store, "_SUCCESS")):
-                prev = spark.read.parquet(store)
-                merged = hll_merge(prev, shard).localCheckpoint(eager=True)
-            else:
-                merged = shard
-            merged.write.mode("overwrite").parquet(store)
-
-        q = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .json(src)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-        all_tok = spark.createDataFrame(
-            [(w,) for t in texts.values() for w in t.split()], "w string"
-        )
-        whole = sorted(
-            map(tuple, hll_registers(all_tok, "w").collect())
-        )
-        stored = sorted(
-            map(tuple, spark.read.parquet(store).collect())
-        )
-        assert stored == whole
 
 
 def test_grouped_registers_max_merge_equals_global(spark):

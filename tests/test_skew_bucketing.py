@@ -9,12 +9,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from dataingestiontohana_spark.operators.skew import (
-    plan_has_exchange,
     read_manifest,
     salted_join,
     table_location,
     write_bucketed,
 )
+from tests.conftest import plan_has_exchange
 
 
 @pytest.fixture(scope="module")

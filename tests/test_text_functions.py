@@ -4,13 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dataingestiontohana_spark.functions.text import (
-    minhash_signature,
-    normalize_text,
-    simhash_bits,
-    tokens,
-    word_shingles,
-)
+from dataingestiontohana_spark.functions.text import normalize_text, tokens
 from dataingestiontohana_spark.operators.dedup import minhash_candidates
 
 
@@ -25,29 +19,8 @@ def test_normalize_collapses_whitespace(spark):
 
 def test_tokens_and_shingles(spark):
     df = _docs(spark, [(1, "a b c d")])
-    row = df.select(
-        tokens("text").alias("t"), word_shingles("text", 3).alias("s")
-    ).head()
+    row = df.select(tokens("text").alias("t")).head()
     assert row["t"] == ["a", "b", "c", "d"]
-    assert row["s"] == ["a b c", "b c d"]
-
-
-def test_shingles_short_doc_empty(spark):
-    df = _docs(spark, [(1, "a b")])
-    assert df.select(word_shingles("text", 3).alias("s")).head()["s"] == []
-
-
-def test_minhash_identical_docs_identical_sigs(spark):
-    text = "the quick brown fox jumps over the lazy dog again and again"
-    df = _docs(spark, [(1, text), (2, text), (3, "completely different words here")])
-    sigs = {
-        r["doc_id"]: tuple(r["sig"])
-        for r in df.select(
-            "doc_id", minhash_signature(word_shingles("text")).alias("sig")
-        ).collect()
-    }
-    assert sigs[1] == sigs[2]
-    assert sigs[1] != sigs[3]
 
 
 def test_minhash_lsh_finds_planted_near_dup(spark):
@@ -65,20 +38,6 @@ def test_minhash_lsh_finds_planted_near_dup(spark):
     assert (1, 2) in pairs
     assert pairs[(1, 2)] > 0.5
     assert (1, 3) not in pairs and (2, 3) not in pairs
-
-
-def test_simhash_similar_docs_close_fingerprints(spark):
-    base = "spark dataframe catalyst tungsten shuffle partition broadcast " * 4
-    near = base + "extra"
-    far = "bananas oranges apples grapes melons peaches plums cherries " * 4
-    df = _docs(spark, [(1, base), (2, near), (3, far)])
-    bits = {
-        r["doc_id"]: r["b"]
-        for r in df.select("doc_id", simhash_bits("text").alias("b")).collect()
-    }
-    ham = lambda a, b: sum(x != y for x, y in zip(a, b))  # noqa: E731
-    assert ham(bits[1], bits[2]) < ham(bits[1], bits[3])
-    assert ham(bits[1], bits[2]) <= 8
 
 
 def test_redact_pii_counts_and_replaces(spark):
